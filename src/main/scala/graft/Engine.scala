@@ -44,13 +44,10 @@ object Engine {
     * cluster then restarts from scratch. Default: local on `local[*]`
     * masters (a lost "executor" is a lost JVM anyway), reliable otherwise —
     * override either way with `SPARK_GRAFT_RELIABLE_CKPT=1|0`.
-    * `SPARK_GRAFT_CC_RELIABLE_CKPT=1` (the r14 spelling) still forces
-    * reliable for back-compat.
     */
   private[graft] def reliableCheckpoints(s: SparkSession): Boolean =
     confFlag("SPARK_GRAFT_RELIABLE_CKPT",
-      default = !s.sparkContext.master.startsWith("local")) ||
-      confFlag("SPARK_GRAFT_CC_RELIABLE_CKPT")
+      default = !s.sparkContext.master.startsWith("local"))
 
   /** Cut lineage at an iterative operator's stage/round boundary, honoring
     * the deployment's fault-tolerance posture ([[reliableCheckpoints]]).

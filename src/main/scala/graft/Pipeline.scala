@@ -106,10 +106,7 @@ object Pipeline {
 
   /** Per-epoch result of [[curateEpoch]] — the observability surface of an
     * incremental run: how the corpus-global verdicts MOVED this epoch
-    * (retroactive drops are first-class, not silent). A replay of an
-    * epoch committed by the PRE-staging layout (which never persisted its
-    * deltas) reports correct totals but ZEROED `added`/`removed`/
-    * `changedShards` — see [[readEpochResult]].
+    * (retroactive drops are first-class, not silent).
     */
   final case class EpochResult(epochId: Long, docsSeen: Long, docsKept: Long,
       added: Long, removed: Long, changedShards: Seq[Int])
@@ -152,7 +149,7 @@ object Pipeline {
   /** Hash-bucket count of the doc-scale verdict state
     * (`state/vbkt/epoch=<e>/bucket=pmod(xxhash64(doc_id), VBuckets)`).
     * Same contract as [[FpBuckets]]: a layout constant with a compacting
-    * migration on change; an epoch reads and rewrites only the buckets
+    * re-bucket on change; an epoch reads and rewrites only the buckets
     * holding its batch's docs plus the docs its deltas flip, so verdict
     * I/O is batch-bound, not corpus-bound.
     */
@@ -349,8 +346,7 @@ object Pipeline {
       // 'rg' rows only: the regate's benchmark fingerprint, so a replay
       // can verify it carries the SAME benchmark the committed regate
       // flagged state against before re-pinning the meta (absent on
-      // every other kind; reads of commits written before these columns
-      // existed resolve them as None)
+      // every other kind)
       bench_n: Option[Long] = None, bench_x: Option[Long] = None)
 
   private[graft] final case class RollRow(lang: String, source: String,
@@ -359,13 +355,13 @@ object Pipeline {
   /** In-memory image of a committed epoch's commit artifact. The pointer
     * maps are DELTA LOGS: `bucket -> every layer holding live rows for
     * it` (layer id: positive e = the `epoch=e` dir — a tail delta, or the
-    * founding/migration full copy; negative -e = the `fold=e` dir — a
+    * founding/re-bucket full copy; negative -e = the `fold=e` dir — a
     * rolling-compaction full copy of a bucket subset written at epoch e).
-    * `kPtr` is the bag-keyed keeper side-state's map (empty on states
-    * committed before the family existed — the next epoch migrates).
-    * `wvFolded`: window-log batches ≤ this id are folded into bucketed
-    * chunk dirs (-1 = none; pre-chunk artifacts read back as -1).
-    * `wvChunks`: the LIVE chunk dirs — explicit liveness, so a chunk
+    * `kPtr` is the bag-keyed keeper side-state's map (nonempty once any
+    * doc was seen). `wvFolded`: window-log batches ≤ this id are folded
+    * into bucketed chunk dirs (-1 = none).
+    * `wvChunks`: the LIVE chunk dirs (never empty: the founding batch
+    * writes the first) — explicit liveness, so a chunk
     * written by a crashed epoch whose batch later re-processed under a
     * different id (replaced checkpoint) is an orphan cleanup deletes,
     * never a silent duplicate in every crossing read.
@@ -484,8 +480,8 @@ object Pipeline {
     * ([[rollSet]]) folds a rotating bucket slice each epoch into a
     * `fold=` layer, keeping every bucket's fan-out ≤ [[FpCompactAt]] —
     * the same amortized O(state / interval) bandwidth an all-at-once
-    * compaction would pay, but smooth: no periodic 2× epoch (full
-    * compactions remain only for layout migrations). This is the LSM
+    * compaction would pay, but smooth: no periodic 2× epoch (a full
+    * compaction remains only for a changed bucket constant). This is the LSM
     * shape: without it, a
     * micro-batch whose fps touch every bucket (any realistic batch does
     * — B distinct fps saturate K << B buckets) would force an O(state)
@@ -565,7 +561,6 @@ object Pipeline {
       : EpochResult = {
     val spark = batch.sparkSession
     val commitDir = s"$outDir/state/commit"
-    val legacyVerdicts = s"$outDir/state/verdicts"
 
     // a COMPLETED epoch short-circuits its own replay (the commit marker
     // landed, so every artifact is already applied — only the post-marker
@@ -573,8 +568,7 @@ object Pipeline {
     // the persisted result. Without this, a replay that arrives after the
     // prune (no earlier base left) would treat the whole corpus as one
     // batch-sized delta and lose every non-batch doc from the state.
-    if (isCommitted(spark, s"$commitDir/epoch=$epochId") ||
-        isCommitted(spark, s"$legacyVerdicts/epoch=$epochId")) {
+    if (isCommitted(spark, s"$commitDir/epoch=$epochId")) {
       cleanupAfterCommit(spark, outDir, epochId, None)
       return readEpochResult(spark, outDir, epochId)
     }
@@ -640,34 +634,26 @@ object Pipeline {
       case _ =>
         if (metaLive) {
           val r = spark.read.parquet(s"$outDir/meta").head()
-          val storedN =
-            if (r.schema.fieldNames.contains("bench_n"))
-              r.getAs[Long]("bench_n") else 0L
-          val storedX =
-            if (r.schema.fieldNames.contains("bench_x"))
-              r.getAs[Long]("bench_x") else 0L
-          // metas written before the explicit flag: gate-on iff the
-          // fingerprint is nonzero (a fp-less benchmark was
-          // indistinguishable from gate-off under that layout anyway)
-          val storedOn =
-            if (r.schema.fieldNames.contains("bench_on"))
-              r.getAs[Boolean]("bench_on")
-            else (storedN, storedX) != (0L, 0L)
-          requireMeta((r.getAs[Int]("num_shards"), storedOn, storedN, storedX))
+          requireCurrentLayout(spark, outDir, Some(r), None)
+          requireMeta((r.getAs[Int]("num_shards"), r.getAs[Boolean]("bench_on"),
+            r.getAs[Long]("bench_n"), r.getAs[Long]("bench_x")))
         } else writeMeta(spark, outDir, numShards, sig, gateOn)
         metaCache.put(outDir, (numShards, gateOn, sig._1, sig._2))
     }
 
-    val docs = batch.select(col("doc_id"), col("lang"), col("source"), col("text"))
+    // the batch is read ONCE: `text` rides the checkpoint next to `toks`,
+    // so the id probe and the staging/quarantine text joins below read
+    // the checkpointed blocks instead of re-scanning the source (a
+    // stream's input-rate figures would otherwise count every re-scan)
+    val base = batch.select(col("doc_id"), col("lang"), col("source"), col("text"))
       .dropDuplicates("doc_id")
-    val base = docs.select(col("doc_id"), col("lang"), col("source"),
-      graft.functions.TextFunctions.wsTokens(col("text")).as("toks"))
+      .withColumn("toks", graft.functions.TextFunctions.wsTokens(col("text")))
       .localCheckpoint() // feeds the signal + window derivations below
+    val batchText = base.select(col("doc_id"), col("text"))
 
     // delta base: the newest COMMITTED earlier epoch (marker = the commit
-    // artifact's _SUCCESS, or the legacy verdict-state _SUCCESS for bases
-    // written by earlier layouts; a crashed attempt of THIS epoch is
-    // handled by the short-circuit above). Driver FS listing.
+    // artifact's _SUCCESS; a crashed attempt of THIS epoch is handled by
+    // the short-circuit above). Driver FS listing.
     val committed = committedEpochs(spark, outDir)
     // defense in depth (mirrors the winv `batch <= epochId` filter): an
     // epoch OLDER than the newest committed one whose own commit artifact
@@ -704,90 +690,42 @@ object Pipeline {
         "the regate with its original benchmark first")
     val lastCommitted: Option[Long] =
       committed.filter(_ < epochId).maxOption
-    // gen3 base (commit artifact); None for legacy bases AND for epoch 0
+    // the delta base's committed state; None only for the founding epoch
     val prevState: Option[EpochState] =
-      lastCommitted.flatMap(e => loadEpochState(spark, outDir, e, useCache = true))
-    val legacyBase = lastCommitted.isDefined && prevState.isEmpty
+      lastCommitted.map(e => loadEpochState(spark, outDir, e, useCache = true))
 
-    // full previous verdict state, by layout generation: (gen3) bucketed
-    // union of pointed epochs; (gen2) a full verdict dir with the
-    // extended columns; (gen1) 5-column verdicts → rebuild the extended
-    // state from the batch-keyed sigs + winv primitives, exactly once.
-    // Legacy rows predate the contamination gate → contam = false (the
-    // meta fingerprint pin above guarantees the gate was off for them).
-    lazy val vPrevAll: DataFrame = (lastCommitted, prevState) match {
-      case (_, Some(st)) => readVBuckets(spark, outDir, st.vPtr, None)
-      case (Some(e), None)
-          if spark.read.parquet(s"$legacyVerdicts/epoch=$e").columns.contains("bag") =>
-        spark.read.parquet(s"$legacyVerdicts/epoch=$e")
-          .withColumn("contam", lit(false)).select(StateCols.map(col): _*)
-      case (Some(e), None) =>
-        val sigs = spark.read.parquet(s"$outDir/state/sigs")
-          .filter(col("batch") <= e)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_tok"), col("h"), col("bag")).distinct()
-        val winv = spark.read.parquet(s"$outDir/state/winv")
-          .filter(col("batch") <= e)
-          .select(col("doc_id"), col("fp")).distinct()
-        Curation.verdictsFullFrom(sigs, winv)
-          .withColumn("contam", lit(false)).select(StateCols.map(col): _*)
-      case (None, _) => emptyVerdictState(spark)
-    }
     // layered (rank-tagged) view for the per-epoch probes: precedence is
     // resolved AFTER each probe shrinks the candidate set (bag join, flip
     // semi-join), so a steady-state epoch never materializes a full
-    // merged view — gen3 only; legacy bases fall back to the merged full
-    // frame, which the compacting migration consumes exactly once anyway.
-    // Bucket pruning is only sound when the state was written under the
-    // CURRENT VBuckets constant — probe bucket sets are computed with the
-    // current hash, so pruning old-constant partitions with them would
-    // silently drop state rows (missed re-deliveries ⇒ duplicate corpus
-    // rows) one epoch BEFORE the compacting re-bucket runs; a mismatch
-    // epoch compacts anyway, so the unpruned read costs nothing extra.
-    def vLayersFor(buckets: Option[Seq[Int]]): DataFrame = prevState match {
-      case Some(st) =>
-        val prunable = if (st.vNB == VBuckets) buckets else None
-        vLayersRanked(spark, outDir, st.vPtr, prunable.map(_.toSet))
-      case None => vPrevAll.withColumn("_layer", lit(0))
+    // merged view. Bucket pruning is only sound when the state was
+    // written under the CURRENT VBuckets constant — probe bucket sets are
+    // computed with the current hash, so pruning old-constant partitions
+    // with them would silently drop state rows (missed re-deliveries ⇒
+    // duplicate corpus rows) one epoch BEFORE the compacting re-bucket
+    // runs; a mismatch epoch compacts anyway, so the unpruned read costs
+    // nothing extra.
+    val vPtrBase: Map[Int, Seq[Long]] =
+      prevState.map(_.vPtr).getOrElse(Map.empty)
+    val vNBBase: Int = prevState.map(_.vNB).getOrElse(VBuckets)
+    def vLayersFor(buckets: Seq[Int]): DataFrame = {
+      val prunable = if (vNBBase == VBuckets) Some(buckets.toSet) else None
+      vLayersRanked(spark, outDir, vPtrBase, prunable)
     }
 
-    // fp-count base, by layout generation: (gen3) pointer rows from the
-    // commit artifact; (r11 legacy) a bucketed fpcnt dir + fpmap; (older)
-    // an un-bucketed fpcnt dir or none at all (rebuild from winv) — the
-    // last two force a compacting full fold into the bucketed layout.
     val emptyFp = spark.range(0).select(col("id").as("fp"), col("id").as("nd"))
-    val (fpPtrBase: Map[Int, Seq[Long]], fpNBBase: Int,
-        fullFpBase: Option[DataFrame]) =
-      (prevState, lastCommitted) match {
-        case (Some(st), _) => (st.fpPtr, st.fpNB, None)
-        case (None, Some(e)) if hasDataFiles(spark, s"$outDir/state/fpmap/epoch=$e") =>
-          // r11 legacy: single full-copy pointers — a one-element layer list
-          val rows = spark.read.parquet(s"$outDir/state/fpmap/epoch=$e")
-            .select(col("bucket"), col("epoch"), col("n_buckets")).collect()
-          (rows.map(r => r.getInt(0) -> Seq(r.getLong(1))).toMap,
-            rows.headOption.map(_.getInt(2)).getOrElse(FpBuckets), None)
-        case (None, Some(e)) if hasDataFiles(spark, s"$outDir/state/fpcnt/epoch=$e") =>
-          (Map.empty[Int, Seq[Long]], FpBuckets,
-            Some(spark.read.parquet(s"$outDir/state/fpcnt/epoch=$e")
-              .select(col("fp"), col("nd"))))
-        case (None, Some(e)) =>
-          (Map.empty[Int, Seq[Long]], FpBuckets,
-            Some(spark.read.parquet(s"$outDir/state/winv")
-              .filter(col("batch") <= e)
-              .select(col("doc_id"), col("fp")).distinct()
-              .groupBy(col("fp")).agg(count(lit(1)).as("nd"))))
-        case (None, None) => (Map.empty[Int, Seq[Long]], FpBuckets, None)
-      }
+    val fpPtrBase: Map[Int, Seq[Long]] =
+      prevState.map(_.fpPtr).getOrElse(Map.empty)
+    val fpNBBase: Int = prevState.map(_.fpNB).getOrElse(FpBuckets)
 
     // re-delivery: batch ids already in the state contribute nothing new
     // (same doc_id ⇒ same text under the at-least-once contract). The
     // probe broadcasts the BATCH side against a bucket-PRUNED scan of the
     // state (only the buckets the batch's ids can live in are read);
     // `seenIds` is ≤ batch-sized.
-    val batchIds = docs.select(col("doc_id"))
+    val batchIds = base.select(col("doc_id"))
     val batchBuckets: Seq[Int] = base.select(vBucket(col("doc_id")).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val seenIds = vLayersFor(Some(batchBuckets)).select(col("doc_id"))
+    val seenIds = vLayersFor(batchBuckets).select(col("doc_id"))
       .join(broadcast(batchIds), Seq("doc_id")).distinct().localCheckpoint()
     val batchSigs = Curation.docSignals(base)
     val newSigs = batchSigs.join(broadcast(seenIds), Seq("doc_id"), "left_anti")
@@ -802,8 +740,6 @@ object Pipeline {
     // heartbeat — carry every pointer and cumulative value forward and
     // write only the commit marker (no winv dir either — a re-delivered
     // doc's windows already sit in the batch dir that first landed it).
-    // Gen3 bases only: a legacy base must run the full path so the
-    // compacting migration happens.
     if (prevState.isDefined && newSigs.isEmpty) {
       val st = prevState.get
       // the stored-manifest shard-set validation (and the report-existence
@@ -841,7 +777,7 @@ object Pipeline {
     // "founding" = the first batch to see any doc: an empty batch 0 (a
     // stream that triggered before data arrived) must not rob the real
     // founding mass of its bucketed-at-birth write
-    val winvIsChunk = lastCommitted.isEmpty || prevState.exists(_.docsSeen == 0L)
+    val winvIsChunk = prevState.forall(_.docsSeen == 0L)
     val newWins =
       if (winvIsChunk) {
         Curation.winFpsOver(newBase.select(col("doc_id"), col("toks")),
@@ -892,14 +828,12 @@ object Pipeline {
     val layerParts: Int =
       math.min(8L, 1L + nContribFps / 4000000L).toInt
     // a FULL compaction (every layer folded into one fresh copy) runs
-    // only on layout MIGRATIONS: an un-bucketed or winv-rebuilt base, or
-    // a changed FpBuckets constant. Steady-state fan-out is bounded by
-    // the ROLLING fold below instead (a per-epoch bucket slice — no
-    // all-at-once compaction cliff); between folds an epoch WRITES only
-    // its own tallies (O(batch)) and the merged view is (re)constructed
-    // on read by summing the pointed layers.
-    val mustCompactFp = fullFpBase.isDefined ||
-      (fpPtrBase.nonEmpty && fpNBBase != FpBuckets)
+    // only on a changed FpBuckets constant. Steady-state fan-out is
+    // bounded by the ROLLING fold below instead (a per-epoch bucket
+    // slice — no all-at-once compaction cliff); between folds an epoch
+    // WRITES only its own tallies (O(batch)) and the merged view is
+    // (re)constructed on read by summing the pointed layers.
+    val mustCompactFp = fpPtrBase.nonEmpty && fpNBBase != FpBuckets
     def fpLayers(buckets: Option[Seq[Int]]): DataFrame = {
       // bucket pruning only when the state was written under the CURRENT
       // FpBuckets constant — `touched` is computed with the current hash,
@@ -926,11 +860,8 @@ object Pipeline {
     // so the aggregation's exchange moves O(batch × layers) rows — a
     // groupBy over the raw layers would re-shuffle every fp in the
     // touched buckets each epoch, breaking the pinned shuffle budget
-    val fPrevFold: DataFrame = fullFpBase match {
-      case Some(full) => full
-      case None => sumFp(fpLayers(Some(touched))
-        .join(bcastFp(contrib.select(col("fp"))), Seq("fp"), "left_semi"))
-    }
+    val fPrevFold: DataFrame = sumFp(fpLayers(Some(touched))
+      .join(bcastFp(contrib.select(col("fp"))), Seq("fp"), "left_semi"))
     val updated = fPrevFold.join(bcastFp(contrib.select(col("fp"), col("add"))),
       Seq("fp")).localCheckpoint()
     val fresh = contrib.join(bcastFp(updated.select(col("fp"))),
@@ -966,7 +897,7 @@ object Pipeline {
             if (mustCompactFp)
               // the one O(state) fold, amortized over the compaction
               // interval: full merged counts + the batch's tallies
-              fullFpBase.getOrElse(sumFp(fpLayers(None)))
+              sumFp(fpLayers(None))
                 .join(bcastFp(contrib.select(col("fp"), col("add"))), Seq("fp"), "left")
                 .select(col("fp"), (col("nd") + coalesce(col("add"), lit(0L))).as("nd"))
                 .unionByName(fresh)
@@ -1047,6 +978,7 @@ object Pipeline {
     // `crossed` is a local filter over the checkpointed batch-sized merge,
     // so the emptiness probe costs no job.
     val prevWvFolded: Long = prevState.map(_.wvFolded).getOrElse(-1L)
+    val prevWvChunks: Seq[Long] = prevState.map(_.wvChunks).getOrElse(Nil)
     val dDup =
       if (crossed.isEmpty)
         spark.range(0).select(col("id").as("doc_id"), col("id").as("d_dup"))
@@ -1068,7 +1000,7 @@ object Pipeline {
           .parquet(s"$outDir/state/winv")
           .filter(col("batch") <= epochId && col("batch") > prevWvFolded)
           .select(col("doc_id"), col("fp"))
-        val chunks = liveChunks(spark, outDir, prevState, lastCommitted)
+        val chunks = prevWvChunks
           .map(c => spark.read.schema(winvcSchema(spark))
             .parquet(s"$outDir/state/winvc/chunk=$c")
             .filter(col("bucket").isInCollection(crossedBuckets))
@@ -1087,26 +1019,16 @@ object Pipeline {
     // bucketed by pmod(xxhash64(bag), KBuckets)) pruned to the batch's
     // bag buckets — a steady epoch reads O(batch-bag buckets), never a
     // full verdict scan. Newest row wins per bag, resolved AFTER the
-    // broadcast bag join shrinks the candidates. A base committed before
-    // the family existed (or a legacy base) migrates ONCE by folding the
-    // keepers out of the merged verdict state — the last full verdict
-    // read a displacement probe ever pays.
+    // broadcast bag join shrinks the candidates.
     val kPtrBase: Map[Int, Seq[Long]] =
       prevState.map(_.kPtr).getOrElse(Map.empty)
     val kNBBase: Int = prevState.map(_.kNB).getOrElse(KBuckets)
-    val kMigrating = lastCommitted.isDefined && kPtrBase.isEmpty
-    lazy val keeperBaseFull: DataFrame =
-      if (kMigrating) vPrevAll.filter(col("bag_keep"))
-        .select(col("bag"), col("doc_id").as("keeper"))
-      else readKBuckets(spark, outDir, kPtrBase, None)
-    def keeperLayers(buckets: Seq[Int]): DataFrame =
-      if (kMigrating) keeperBaseFull.withColumn("_layer", lit(0))
-      else {
-        // pruning gated on the stored bucket constant, like the other
-        // families (probe buckets use the current hash)
-        val prunable = if (kNBBase == KBuckets) Some(buckets.toSet) else None
-        kLayersRanked(spark, outDir, kPtrBase, prunable)
-      }
+    def keeperLayers(buckets: Seq[Int]): DataFrame = {
+      // pruning gated on the stored bucket constant, like the other
+      // families (probe buckets use the current hash)
+      val prunable = if (kNBBase == KBuckets) Some(buckets.toSet) else None
+      kLayersRanked(spark, outDir, kPtrBase, prunable)
+    }
     // NOT checkpointed: a deterministic single aggregation over the
     // checkpointed newSigs — each consumer (the bucket collect below,
     // the bagMatch broadcast build, freshRows, the kbkt delta) re-runs
@@ -1153,13 +1075,9 @@ object Pipeline {
       .select(vBucket(col("doc_id")).as("b")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
 
-    // verdict-state compaction mirrors the fp-state rule; a legacy base
-    // always compacts (that IS the migration into the bucketed layout);
-    // steady-state fan-out is the rolling fold's job
-    val vPtrBase: Map[Int, Seq[Long]] =
-      prevState.map(_.vPtr).getOrElse(Map.empty)
-    val mustCompactV = legacyBase ||
-      (vPtrBase.nonEmpty && prevState.exists(_.vNB != VBuckets))
+    // verdict-state compaction mirrors the fp-state rule; steady-state
+    // fan-out is the rolling fold's job
+    val mustCompactV = vPtrBase.nonEmpty && vNBBase != VBuckets
 
     // assemble the epoch's CHANGED verdict rows only: the flipped docs'
     // old rows re-emitted with the flips applied (bucket-pruned merged
@@ -1170,7 +1088,7 @@ object Pipeline {
       // candidates = every layer's rows for the flip docs (bucket-pruned
       // read + broadcast semi-join), then newest row wins per doc — the
       // precedence aggregation shuffles only flip-scale rows
-      mergeRankedVerdicts(vLayersFor(Some(flipBuckets))
+      mergeRankedVerdicts(vLayersFor(flipBuckets)
         .join(broadcast(flipIds), Seq("doc_id")))
     val exist = flipOld
       .withColumnRenamed("kept", "kept_prev")
@@ -1276,7 +1194,8 @@ object Pipeline {
       else if (mustCompactV || vPtrBase.isEmpty) {
         val layer =
           if (mustCompactV)
-            vPrevAll.join(broadcast(changed.select(col("doc_id"))),
+            readVBuckets(spark, outDir, vPtrBase, None)
+              .join(broadcast(changed.select(col("doc_id"))),
                 Seq("doc_id"), "left_anti")
               .unionByName(changed)
               .withColumn("bucket", vBucket(col("doc_id")))
@@ -1303,22 +1222,21 @@ object Pipeline {
     // keeper side-state layer: one row per bag whose keeper CHANGED this
     // epoch (fresh bags elect their batch minimum; displaced keepers hand
     // off to it) — ≤ batch-bag-scale, derived from the checkpointed
-    // batchMin/bagMatch probes, no state re-read. A migration (pre-keeper
-    // or legacy base, or a changed KBuckets constant) instead writes the
-    // full merged keeper copy, bucket-partitioned.
+    // batchMin/bagMatch probes, no state re-read. The founding epoch and
+    // a changed KBuckets constant instead write the full merged keeper
+    // copy, bucket-partitioned.
     val kDelta = batchMin
       .join(broadcast(bagMatch.select(col("bag"), col("k_id"))), Seq("bag"), "left")
       .filter(col("k_id").isNull || col("b_min") < col("k_id"))
       .select(col("bag"), col("b_min").as("keeper"))
-    val mustCompactK = kMigrating ||
-      (kPtrBase.nonEmpty && kNBBase != KBuckets)
+    val mustCompactK = kPtrBase.nonEmpty && kNBBase != KBuckets
     val kPtrApp: Map[Int, Seq[Long]] = {
       val kDir = s"$outDir/state/kbkt/epoch=$epochId"
       if (mustCompactK || kPtrBase.isEmpty) {
-        // founding / migration: the full keeper copy (base newest-wins
+        // founding / re-bucket: the full keeper copy (base newest-wins
         // merged, this epoch's changes applied), partitioned for pruned
         // reads. The founding base is empty, so its layer IS the delta.
-        val layer = keeperBaseFull
+        val layer = readKBuckets(spark, outDir, kPtrBase, None)
           .join(broadcast(kDelta.select(col("bag"))), Seq("bag"), "left_anti")
           .unionByName(kDelta)
           .withColumn("bucket", kBucket(col("bag")))
@@ -1362,8 +1280,6 @@ object Pipeline {
     val foldable: Seq[Long] = listPartitionLongs(spark,
         s"$outDir/state/winv", "batch=")
       .filter(b => b > prevWvFolded && b < epochId).toSeq.sorted
-    val prevWvChunks: Seq[Long] =
-      liveChunks(spark, outDir, prevState, lastCommitted)
     val wvFoldedNew: Long =
       if (foldable.size < FpCompactAt) prevWvFolded
       else {
@@ -1395,7 +1311,7 @@ object Pipeline {
         col("bag_keep"), Curation.spanDropExpr(col("n_win"), col("n_dup")))
       assembled.filter(col("is_new") && col("contam") && keptBase)
         .select(col("doc_id"), col("lang"), col("source"), col("n_tok"))
-        .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
+        .join(batchText, Seq("doc_id"))
         .coalesce(1)
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$outDir/state/quar/batch=$epochId")
@@ -1444,28 +1360,11 @@ object Pipeline {
       .filter { case (_, d) => d._1 != 0L || d._2 != 0L }
       .toMap
 
-    // previous cumulative values: from the gen3 commit artifact, or —
-    // legacy-migration only, exactly once — rebuilt by aggregating the
-    // previous verdict state (the last O(corpus) aggregations an upgraded
-    // deployment ever runs)
-    val (prevRoll: Map[(String, String), RollRow], prevShardKept: Map[Int, Long]) =
-      prevState match {
-        case Some(st) => (st.rollup, st.shardKept)
-        case None if lastCommitted.isDefined =>
-          val r = vPrevAll.groupBy(col("lang"), col("source")).agg(
-            count(lit(1)).as("di"),
-            sum(when(col("kept"), 1L).otherwise(0L)).as("dk"),
-            sum(when(col("kept"), col("n_tok")).otherwise(0L)).as("tk"),
-            sum(when(col("contam"), 1L).otherwise(0L)).as("dc")).collect()
-            .map(x => (x.getString(0), x.getString(1)) -> RollRow(
-              x.getString(0), x.getString(1), x.getLong(2), x.getLong(3),
-              x.getLong(4), x.getLong(5))).toMap
-          val s = vPrevAll.filter(col("kept")).groupBy(shardOf.as("shard"))
-            .agg(count(lit(1)).as("n")).collect()
-            .map(x => x.getInt(0) -> x.getLong(1)).toMap
-          (r, s)
-        case None => (Map.empty[(String, String), RollRow], Map.empty[Int, Long])
-      }
+    // previous cumulative values, from the base's commit artifact
+    val prevRoll: Map[(String, String), RollRow] =
+      prevState.map(_.rollup).getOrElse(Map.empty)
+    val prevShardKept: Map[Int, Long] =
+      prevState.map(_.shardKept).getOrElse(Map.empty)
     val rollupNew: Map[(String, String), RollRow] =
       dRoll.foldLeft(prevRoll) { case (acc, (key, d)) =>
         val p = acc.getOrElse(key, RollRow(key._1, key._2, 0L, 0L, 0L, 0L))
@@ -1502,17 +1401,14 @@ object Pipeline {
       // regates stage under their own `regate=` root, so this guards
       // manual restores and corruption — and replaying it would apply
       // shards this epoch never computed, then delete `deltas ∖ staged`
-      // as "emptied". Rebuild instead. An empty shard= listing over a
-      // committed dir is the pre-partitioned legacy staging layout,
-      // which applyStagedShards resolves from the data itself.
-      val stagedShards = listPartitionInts(spark, stagingPath, "shard=")
+      // as "emptied". Rebuild instead.
       val stagingReusable = isCommitted(spark, stagingPath) &&
-        (stagedShards.isEmpty || stagedShards.subsetOf(deltas.toSet))
+        listPartitionInts(spark, stagingPath, "shard=").subsetOf(deltas.toSet)
       if (!stagingReusable) {
         deleteDir(spark, stagingRoot) // a stale attempt against another base
         val addedContent = added
           .select(col("doc_id"), col("lang"), col("source"), col("n_tok"))
-          .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
+          .join(batchText, Seq("doc_id"))
           .withColumn("shard", Layout.shardKey(col("doc_id"), numShards))
           .select(col("doc_id"), col("lang"), col("source"), col("n_tok"),
             col("text"), col("shard"))
@@ -1587,17 +1483,7 @@ object Pipeline {
     */
   private def applyStagedShards(spark: SparkSession, corpusPath: String,
       stagingPath: String, deltas: Seq[Int]): Unit = {
-    val writtenShards: Set[Int] = {
-      val fromDirs = listPartitionInts(spark, stagingPath, "shard=")
-      // a crashed epoch staged by the pre-partitioned layout holds flat
-      // files with shard as a data column — no shard= dirs. Falling
-      // through with an empty set would skip the overwrite and then
-      // DELETE every changed shard (silent data loss); read the staged
-      // shard values instead for that one replay.
-      if (fromDirs.nonEmpty || !hasDataFiles(spark, stagingPath)) fromDirs
-      else spark.read.parquet(stagingPath).select(col("shard")).distinct()
-        .collect().map(_.getInt(0)).toSet
-    }
+    val writtenShards = listPartitionInts(spark, stagingPath, "shard=")
     if (writtenShards.nonEmpty) {
       val newContent = spark.read.parquet(stagingPath)
         .select(col("doc_id"), col("lang"), col("source"), col("n_tok"),
@@ -1672,7 +1558,7 @@ object Pipeline {
     }
   }
 
-  /** Column order of a verdict-state row (gen3). */
+  /** Column order of a verdict-state row. */
   private val StateCols = Seq("doc_id", "lang", "source", "n_tok", "h",
     "bag", "bag_keep", "n_win", "n_dup", "contam", "kept")
 
@@ -1688,7 +1574,7 @@ object Pipeline {
 
   /** Path of layer `id` under family dir `fam` ("fpcnt" | "vbkt" |
     * "kbkt"): positive id = `epoch=<id>` (a tail delta, or the founding /
-    * migration full copy), negative id = `fold=<-id>` (a rolling-
+    * re-bucket full copy), negative id = `fold=<-id>` (a rolling-
     * compaction full copy of a bucket subset written at epoch -id).
     */
   private def layerPath(outDir: String, fam: String, id: Long): String =
@@ -1730,7 +1616,7 @@ object Pipeline {
     * newest-row-wins per doc via `max_by(_layer)` over the small
     * candidate set — the steady-state read path. Materializing the full
     * merged view ([[readVBuckets]]) is reserved for compaction,
-    * migration, and regate passes: its one max_by aggregation exchanges
+    * fold, and regate passes: its one max_by aggregation exchanges
     * the whole read set, which a steady-state epoch must not pay.
     */
   private def vLayersRanked(spark: SparkSession, outDir: String,
@@ -1745,7 +1631,7 @@ object Pipeline {
     * a bucket subset (partition-pruned reads). Newest row wins per doc,
     * resolved by ONE max_by aggregation over all pointed rows — an
     * O(read-set) exchange, which is the right trade for this path's
-    * callers (migrations, compactions, [[regate]] — all declared
+    * callers (re-buckets, folds, [[regate]] — all declared
     * O(state) passes). A broadcast-shadow anti-join chain would be
     * exchange-free but assumes every non-oldest layer is batch-scale; a
     * rolling FOLD layer holds up to half the state's rows, so that
@@ -1789,13 +1675,9 @@ object Pipeline {
 
   private def writeMeta(spark: SparkSession, outDir: String, numShards: Int,
       sig: (Long, Long), gateOn: Boolean): Unit =
-    // `winc` marks a gate-on dir founded by winc-logging code — the
-    // [[regate]] precondition (an upgraded dir founded before the log
-    // existed has docs with no recorded decontam fps, so a regate over it
-    // would silently under-flag; it must refuse instead)
     spark.range(1).select(lit(numShards).as("num_shards"),
         lit(sig._1).as("bench_n"), lit(sig._2).as("bench_x"),
-        lit(gateOn).as("bench_on"), lit(gateOn).as("winc"))
+        lit(gateOn).as("bench_on"))
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/meta")
 
   private def writeReport(spark: SparkSession, path: String,
@@ -1862,67 +1744,83 @@ object Pipeline {
     stateCache.put(outDir, (epochId, st))
   }
 
-  /** The committed [[EpochState]] of epoch `e`, or None when `e` was
-    * committed by a pre-commit-artifact layout (the caller then runs the
-    * compacting migration). `useCache = false` forces the parquet read —
-    * cleanup paths use it so a replay can never prune against a stale
-    * in-JVM image.
+  /** The [[EpochState]] of committed epoch `e`. `useCache = false`
+    * forces the parquet read — cleanup paths use it so a replay can never
+    * prune against a stale in-JVM image. Every read from disk passes
+    * [[requireCurrentLayout]].
     */
   private def loadEpochState(spark: SparkSession, outDir: String, e: Long,
-      useCache: Boolean): Option[EpochState] = {
+      useCache: Boolean): EpochState = {
     val cached = if (useCache) stateCache.get(outDir).filter(_._1 == e) else None
     cached match {
-      case Some((_, st)) => Some(st)
+      case Some((_, st)) => st
       case None =>
-        val path = s"$outDir/state/commit/epoch=$e"
-        if (!isCommitted(spark, path)) None
-        else {
-          val sq = spark
-          import sq.implicits._
-          val rows = spark.read
-            .schema(org.apache.spark.sql.Encoders.product[CommitRow].schema)
-            .parquet(path).as[CommitRow].collect()
-          val fp = rows.filter(_.kind == "fp")
-          val v = rows.filter(_.kind == "v")
-          val k = rows.filter(_.kind == "k")
-          def ptrOf(rs: Array[CommitRow]): Map[Int, Seq[Long]] =
-            rs.groupBy(_.bucket.get)
-              .view.mapValues(_.map(_.epoch.get).toSeq.sorted).toMap
-          val st = EpochState(
-            ptrOf(fp),
-            fp.headOption.flatMap(_.n_buckets).getOrElse(FpBuckets),
-            ptrOf(v),
-            v.headOption.flatMap(_.n_buckets).getOrElse(VBuckets),
-            rows.filter(_.kind == "roll").map(r =>
-              (r.lang.get, r.source.get) -> RollRow(r.lang.get, r.source.get,
-                r.docs_in.get, r.docs_kept.get, r.tokens_kept.get,
-                r.docs_contam.getOrElse(0L))).toMap,
-            rows.filter(_.kind == "shard")
-              .map(r => r.shard.get -> r.n_kept.get).toMap,
-            ptrOf(k),
-            k.headOption.flatMap(_.n_buckets).getOrElse(KBuckets),
-            rows.find(_.kind == "wv").flatMap(_.epoch).getOrElse(-1L),
-            rows.filter(_.kind == "wvc").flatMap(_.epoch).toSeq.sorted,
-            rows.find(_.kind == "wc").flatMap(_.epoch).getOrElse(-1L),
-            rows.filter(_.kind == "wcc").flatMap(_.epoch).toSeq.sorted,
-            rows.find(_.kind == "qf").flatMap(_.epoch).getOrElse(-1L),
-            rows.filter(_.kind == "qfc").flatMap(_.epoch).toSeq.sorted,
-            rows.filter(_.kind == "fpu").flatMap(_.bucket).toSet)
-          if (useCache) stateCache.put(outDir, (e, st))
-          Some(st)
-        }
+        val rows = readCommit(spark, outDir, e)
+        val fp = rows.filter(_.kind == "fp")
+        val v = rows.filter(_.kind == "v")
+        val k = rows.filter(_.kind == "k")
+        def ptrOf(rs: Array[CommitRow]): Map[Int, Seq[Long]] =
+          rs.groupBy(_.bucket.get)
+            .view.mapValues(_.map(_.epoch.get).toSeq.sorted).toMap
+        val st = EpochState(
+          ptrOf(fp),
+          fp.headOption.flatMap(_.n_buckets).getOrElse(FpBuckets),
+          ptrOf(v),
+          v.headOption.flatMap(_.n_buckets).getOrElse(VBuckets),
+          rows.filter(_.kind == "roll").map(r =>
+            (r.lang.get, r.source.get) -> RollRow(r.lang.get, r.source.get,
+              r.docs_in.get, r.docs_kept.get, r.tokens_kept.get,
+              r.docs_contam.getOrElse(0L))).toMap,
+          rows.filter(_.kind == "shard")
+            .map(r => r.shard.get -> r.n_kept.get).toMap,
+          ptrOf(k),
+          k.headOption.flatMap(_.n_buckets).getOrElse(KBuckets),
+          rows.find(_.kind == "wv").flatMap(_.epoch).getOrElse(-1L),
+          rows.filter(_.kind == "wvc").flatMap(_.epoch).toSeq.sorted,
+          rows.find(_.kind == "wc").flatMap(_.epoch).getOrElse(-1L),
+          rows.filter(_.kind == "wcc").flatMap(_.epoch).toSeq.sorted,
+          rows.find(_.kind == "qf").flatMap(_.epoch).getOrElse(-1L),
+          rows.filter(_.kind == "qfc").flatMap(_.epoch).toSeq.sorted,
+          rows.filter(_.kind == "fpu").flatMap(_.bucket).toSet)
+        requireCurrentLayout(spark, outDir, None, Some(st))
+        if (useCache) stateCache.put(outDir, (e, st))
+        st
     }
+  }
+
+  /** Refuse an outDir written by an earlier state layout, before any
+    * write: this code reads only the layout it writes, and no migration
+    * path exists. Checked on the meta row when it is read from disk (a
+    * meta without `bench_on`, or a `state/verdicts` dir — the layouts
+    * before the commit artifact) and on every commit artifact loaded
+    * from disk (no `wvc` row, or no `k` row once docs were seen — both
+    * always present in a current commit; without them the window-log
+    * chunks or the keepers would be read as empty, silently wrong).
+    */
+  private def requireCurrentLayout(spark: SparkSession, outDir: String,
+      meta: Option[org.apache.spark.sql.Row], st: Option[EpochState]): Unit = {
+    val verdictsDir = new org.apache.hadoop.fs.Path(s"$outDir/state/verdicts")
+    val outdated = Seq(
+      "meta without bench_on" ->
+        meta.exists(!_.schema.fieldNames.contains("bench_on")),
+      "state/verdicts" -> (meta.isDefined && verdictsDir
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(verdictsDir)),
+      "commit without wvc rows" -> st.exists(_.wvChunks.isEmpty),
+      "commit without k rows" ->
+        st.exists(s => s.docsSeen > 0L && s.kPtr.isEmpty))
+      .collect { case (what, true) => what }
+    require(outdated.isEmpty,
+      s"$outDir was written by an outdated state layout " +
+        s"(${outdated.mkString(", ")}) that this version no longer reads; " +
+        "re-found it with `curate` into an empty outDir")
   }
 
   /** Post-marker cleanup for a committed epoch — idempotent, re-runnable
     * by a replay that arrives after the marker: drop superseded commit /
     * verdict / fpcnt state (bucket epochs stay alive exactly as long as
     * the CURRENT pointer maps reference them), the epoch's transient
-    * staging, and — once the epoch committed under the gen3 layout — the
-    * legacy `state/sigs` / `state/texts` / `state/fpmap` /
-    * `state/epochres` / `state/verdicts` dirs a migrated deployment left
-    * behind (the migration consumed them exactly once; without this an
-    * upgraded outDir would keep a permanent full-text mirror on disk).
+    * staging, and folded or orphaned batch-log dirs.
     * `stIn` carries the referenced sets on the normal commit path; the
     * replay short-circuit re-reads them from the commit artifact (never
     * the JVM cache — a wiped-and-recreated outDir must not prune against
@@ -1930,30 +1828,11 @@ object Pipeline {
     */
   private def cleanupAfterCommit(spark: SparkSession, outDir: String,
       epochId: Long, stIn: Option[EpochState]): Unit = {
-    val gen3 = isCommitted(spark, s"$outDir/state/commit/epoch=$epochId")
-    val st: Option[EpochState] =
-      stIn.orElse(if (gen3) loadEpochState(spark, outDir, epochId,
-        useCache = false) else None)
-    def pruneEpochs(dir: String, keep: Long => Boolean): Unit = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
-        fs.listStatus(p).toSeq.map(_.getPath)
-          .filter(_.getName.startsWith("epoch="))
-          .filter(d => !keep(d.getName.stripPrefix("epoch=").toLong))
-          .foreach(old => fs.delete(old, true))
-    }
-    pruneEpochs(s"$outDir/state/commit", _ >= epochId)
-    // bucket state lives as long as the CURRENT pointer maps reference it
-    // (a bucket an epoch didn't touch keeps pointing at its older copy)
-    val fpRef: Set[Long] = st.map(_.fpPtr.values.flatten.toSet).getOrElse {
-      // legacy-committed epoch: referenced set from its fpmap artifact
-      if (!hasDataFiles(spark, s"$outDir/state/fpmap/epoch=$epochId")) Set.empty
-      else spark.read.parquet(s"$outDir/state/fpmap/epoch=$epochId")
-        .select(col("epoch")).distinct().collect().map(_.getLong(0)).toSet
-    }
-    val vRef: Set[Long] = st.map(_.vPtr.values.flatten.toSet).getOrElse(Set.empty)
-    val kRef: Set[Long] = st.map(_.kPtr.values.flatten.toSet).getOrElse(Set.empty)
+    val st: EpochState = stIn.getOrElse(
+      loadEpochState(spark, outDir, epochId, useCache = false))
+    listPartitionLongs(spark, s"$outDir/state/commit", "epoch=")
+      .filter(_ < epochId)
+      .foreach(e => deleteDir(spark, s"$outDir/state/commit/epoch=$e"))
     // family layer dirs: epoch=e live iff not yet superseded or referenced;
     // fold=f dirs are referenced as the NEGATIVE id -f
     def pruneFamily(dir: String, refs: Set[Long]): Unit = {
@@ -1973,32 +1852,25 @@ object Pipeline {
           if (dead) { fs.delete(d, true); () }
         }
     }
-    pruneFamily(s"$outDir/state/fpcnt", fpRef)
-    pruneFamily(s"$outDir/state/vbkt", vRef)
-    pruneFamily(s"$outDir/state/kbkt", kRef)
+    // bucket state lives as long as the CURRENT pointer maps reference it
+    // (a bucket an epoch didn't touch keeps pointing at its older copy)
+    pruneFamily(s"$outDir/state/fpcnt", st.fpPtr.values.flatten.toSet)
+    pruneFamily(s"$outDir/state/vbkt", st.vPtr.values.flatten.toSet)
+    pruneFamily(s"$outDir/state/kbkt", st.kPtr.values.flatten.toSet)
     // batch-keyed append-only logs (window log + the gate-revision
     // logs), one shared rule: flats folded into a chunk are superseded
     // once the fold's commit landed; chunks themselves are immutable and
     // permanent EXCEPT orphans — a chunk written by a crashed attempt
     // whose batch later re-processed under a different id (replaced
     // checkpoint) is referenced by no commit's live set and is deleted
-    // rather than duplicating the log's rows in every later read. Only a
-    // liveness-aware commit (nonempty chunk rows) may prune chunks: a
-    // state committed by chunk-writing code that predates explicit
-    // liveness reads back an empty list, and pruning against that would
-    // delete every LIVE chunk of an upgraded dir.
+    // rather than duplicating the log's rows in every later read. An
+    // empty live list prunes no chunk (it can only prune less).
     def pruneBatchLog(flatRoot: String, chunkRoot: String,
-        folded: Option[Long], liveIn: Option[Seq[Long]]): Unit = {
-      folded.filter(_ >= 0L).foreach { ft =>
-        val p = new org.apache.hadoop.fs.Path(flatRoot)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p))
-          fs.listStatus(p).toSeq.map(_.getPath)
-            .filter(_.getName.startsWith("batch="))
-            .filter(_.getName.stripPrefix("batch=").toLong <= ft)
-            .foreach(d => fs.delete(d, true))
-      }
-      liveIn.filter(_.nonEmpty).foreach { chunks =>
+        folded: Long, chunks: Seq[Long]): Unit = {
+      if (folded >= 0L)
+        listPartitionLongs(spark, flatRoot, "batch=").filter(_ <= folded)
+          .foreach(b => deleteDir(spark, s"$flatRoot/batch=$b"))
+      if (chunks.nonEmpty) {
         val live = chunks.toSet
         listPartitionLongs(spark, chunkRoot, "chunk=")
           .filter(c => c < epochId && !live.contains(c))
@@ -2006,23 +1878,11 @@ object Pipeline {
       }
     }
     pruneBatchLog(s"$outDir/state/winv", s"$outDir/state/winvc",
-      st.map(_.wvFolded), st.map(_.wvChunks))
+      st.wvFolded, st.wvChunks)
     pruneBatchLog(s"$outDir/state/winc", s"$outDir/state/wincc",
-      st.map(_.wcFolded), st.map(_.wcChunks))
+      st.wcFolded, st.wcChunks)
     pruneBatchLog(s"$outDir/state/quar", s"$outDir/state/quarc",
-      st.map(_.qFolded), st.map(_.qChunks))
-    if (gen3) {
-      // the gen3 commit supersedes every legacy artifact wholesale
-      Seq("sigs", "texts", "fpmap", "epochres", "verdicts")
-        .foreach(d => deleteDir(spark, s"$outDir/state/$d"))
-    } else {
-      // epoch committed by a legacy layout (replay short-circuit only):
-      // the legacy pruning rules, and NEVER sigs/texts — the next real
-      // epoch's migration still needs them
-      Seq(s"$outDir/state/verdicts", s"$outDir/state/fpmap",
-        s"$outDir/state/epochres")
-        .foreach(dir => pruneEpochs(dir, _ >= epochId))
-    }
+      st.qFolded, st.qChunks)
     // drop this epoch's own staging and every superseded attempt — but
     // SPARE a newer in-flight regate's root: its `bsig` fingerprint is
     // both the guard that keeps epochs from running over the
@@ -2043,55 +1903,33 @@ object Pipeline {
   }
 
   /** The persisted result row of a committed epoch (written inside its
-    * commit marker), for the replay short-circuit. Falls back to the
-    * legacy `epochres` artifact, then to counts re-derived from the
-    * legacy verdict state — that last fallback reports `added = 0`,
-    * `removed = 0`, `changedShards = Nil` because the pre-staging layout
-    * never persisted its deltas: callers replaying such an epoch get
-    * correct totals but ZEROED delta fields (the state on disk is
-    * complete; only this epoch's movement report is unrecoverable).
+    * commit marker), for the replay short-circuit.
     */
   private def readEpochResult(spark: SparkSession, outDir: String,
       epochId: Long): EpochResult = {
-    val commitPath = s"$outDir/state/commit/epoch=$epochId"
-    val legacyRes = s"$outDir/state/epochres/epoch=$epochId"
-    if (hasDataFiles(spark, commitPath)) {
-      val r = spark.read.parquet(commitPath).filter(col("kind") === "res").head()
-      EpochResult(epochId, r.getAs[Long]("docs_seen"), r.getAs[Long]("docs_kept"),
-        r.getAs[Long]("added"), r.getAs[Long]("removed"),
-        r.getAs[scala.collection.Seq[Int]]("changed_shards").toSeq)
-    } else if (hasDataFiles(spark, legacyRes)) {
-      val r = spark.read.parquet(legacyRes).head()
-      EpochResult(epochId, r.getAs[Long]("docs_seen"), r.getAs[Long]("docs_kept"),
-        r.getAs[Long]("added"), r.getAs[Long]("removed"),
-        r.getAs[scala.collection.Seq[Int]]("changed_shards").toSeq)
-    } else {
-      val v = spark.read.parquet(s"$outDir/state/verdicts/epoch=$epochId")
-      val t = v.agg(count(lit(1)),
-        coalesce(sum(when(col("kept"), 1L).otherwise(0L)), lit(0L))).head()
-      EpochResult(epochId, t.getLong(0), t.getLong(1), 0L, 0L, Nil)
-    }
+    val r = readCommit(spark, outDir, epochId).find(_.kind == "res").get
+    EpochResult(epochId, r.docs_seen.get, r.docs_kept.get, r.added.get,
+      r.removed.get, r.changed_shards.get)
   }
 
-  /** Epoch ids under `outDir` whose write fully committed — the gen3
-    * commit artifact's `_SUCCESS`, or (legacy bases) the verdict-state
+  /** The rows of epoch `e`'s commit artifact (explicit schema: no
+    * footer-inference job).
+    */
+  private def readCommit(spark: SparkSession, outDir: String,
+      e: Long): Array[CommitRow] = {
+    val sq = spark
+    import sq.implicits._
+    spark.read.schema(org.apache.spark.sql.Encoders.product[CommitRow].schema)
+      .parquet(s"$outDir/state/commit/epoch=$e").as[CommitRow].collect()
+  }
+
+  /** Epoch ids under `outDir` whose commit artifact fully landed — its
     * `_SUCCESS` (a crash mid-job-commit can leave a partial file set that
     * `hasDataFiles` alone would mistake for a complete state).
     */
-  private def committedEpochs(spark: SparkSession, outDir: String): Seq[Long] = {
-    def ids(path: String): Seq[Long] = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filter(_.startsWith("epoch="))
-        .map(_.stripPrefix("epoch=").toLong)
-        .filter(e => isCommitted(spark, s"$path/epoch=$e"))
-    }
-    (ids(s"$outDir/state/commit") ++ ids(s"$outDir/state/verdicts")).distinct
-  }
+  private def committedEpochs(spark: SparkSession, outDir: String): Seq[Long] =
+    listPartitionLongs(spark, s"$outDir/state/commit", "epoch=").toSeq
+      .filter(e => isCommitted(spark, s"$outDir/state/commit/epoch=$e"))
 
   /** Integer suffixes of `<prefix>N` child dirs under `dir` — the free
     * (listing-only) way to learn which partitions a write landed.
@@ -2114,24 +1952,6 @@ object Pipeline {
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(_.startsWith(prefix))
       .map(_.stripPrefix(prefix).toLong).toSet
-  }
-
-  /** The LIVE window-log chunks of a committed base: the commit
-    * artifact's `wvc` rows, or — for a state committed by chunk-writing
-    * code that predates explicit liveness — every `_SUCCESS`-committed
-    * chunk dir at or below the base epoch (the pre-`wvc` read rule, so
-    * an upgraded dir neither skips its chunks nor has them deleted as
-    * orphans).
-    */
-  private def liveChunks(spark: SparkSession, outDir: String,
-      prevState: Option[EpochState], lastCommitted: Option[Long])
-      : Seq[Long] = prevState match {
-    case Some(st) if st.wvChunks.nonEmpty => st.wvChunks
-    case _ =>
-      listPartitionLongs(spark, s"$outDir/state/winvc", "chunk=")
-        .filter(c => lastCommitted.exists(c <= _) &&
-          isCommitted(spark, s"$outDir/state/winvc/chunk=$c"))
-        .toSeq.sorted
   }
 
   /** Fold the accumulated flat `batch=` dirs of an append-only batch-
@@ -2185,7 +2005,7 @@ object Pipeline {
     if (fs.exists(p)) { fs.delete(p, true); () }
   }
 
-  /** Empty frame with the gen3 verdict-state schema — the epoch-0 delta
+  /** Empty frame with the verdict-state schema — the epoch-0 delta
     * base. Derived THROUGH the producer over empty inputs (only the
     * narrow sigs/winv input contracts are spelled out here), so a schema
     * change in the one-copy formula can never leave this branch emitting
@@ -2329,8 +2149,8 @@ object Pipeline {
     * benchmark, recomputed from the persisted decontam-fp log
     * (`state/winc`) — no dropped doc's text is needed; resurrection text
     * comes from `state/quar`. Preconditions (all fail loudly): the dir
-    * is gate-on AND was founded by winc-logging code (meta `winc` flag),
-    * at least one commit-artifact epoch exists, and `epochId` exceeds
+    * holds the current state layout and is gate-on, at least one epoch
+    * is committed, and `epochId` exceeds
     * every committed epoch (it joins the epoch sequence; a stream
     * resumed via [[startIncremental]] re-bases past it automatically).
     *
@@ -2348,14 +2168,10 @@ object Pipeline {
     require(hasDataFiles(spark, s"$outDir/meta"),
       s"$outDir has no meta artifact — nothing to regate")
     val m = spark.read.parquet(s"$outDir/meta").head()
+    requireCurrentLayout(spark, outDir, Some(m), None)
     val numShards = m.getAs[Int]("num_shards")
-    require(m.schema.fieldNames.contains("bench_on") &&
-        m.getAs[Boolean]("bench_on"),
+    require(m.getAs[Boolean]("bench_on"),
       s"regate requires a decontamination-gated outDir; $outDir is gate-off")
-    require(m.schema.fieldNames.contains("winc") && m.getAs[Boolean]("winc"),
-      s"$outDir was founded before the decontam-fp log existed — its docs " +
-        "have no recorded fps, so a regate would silently under-flag; " +
-        "re-found the corpus instead")
     val fps2 = Curation.benchmarkFps(newBenchmark).localCheckpoint()
     val sig2 = benchSig(fps2)
     def repinMeta(): Unit = {
@@ -2372,21 +2188,7 @@ object Pipeline {
       // re-pinning the meta to v2 over v1-flagged state (and pruning the
       // quarantine — the only stored text of resurrectable docs) would
       // be irreversible corruption.
-      // hasDataFiles guard: an epoch committed under the LEGACY verdict
-      // layout has no commit artifact at all — it is certainly not a
-      // regate, and the read would otherwise throw path-not-found
-      // instead of the message below
-      val commitPath = s"$outDir/state/commit/epoch=$epochId"
-      val rgRow: Option[CommitRow] =
-        if (!hasDataFiles(spark, commitPath)) None
-        else {
-          val sq = spark
-          import sq.implicits._
-          spark.read
-            .schema(org.apache.spark.sql.Encoders.product[CommitRow].schema)
-            .parquet(commitPath).filter(col("kind") === "rg")
-            .as[CommitRow].collect().headOption
-        }
+      val rgRow = readCommit(spark, outDir, epochId).find(_.kind == "rg")
       require(rgRow.isDefined,
         s"epoch $epochId in $outDir is an ordinary committed epoch, not " +
           "a regate — refusing to re-pin the benchmark over unflagged state")
@@ -2396,18 +2198,15 @@ object Pipeline {
       // verdict state was never flagged under — and then pruning the
       // quarantine, the only stored text of resurrectable docs — would
       // be irreversible silent corruption. The 'rg' row records the
-      // fingerprint at commit for exactly this check; a pre-recording
-      // commit (bench_n absent) fails the same way rather than guessing.
+      // fingerprint at commit for exactly this check.
       val storedSig: Option[(Long, Long)] =
         for { r <- rgRow; n <- r.bench_n; x <- r.bench_x } yield (n, x)
       require(storedSig.contains(sig2),
         s"epoch $epochId in $outDir is a committed regate against a " +
           s"DIFFERENT benchmark (recorded fingerprint " +
-          s"${storedSig.map(_.toString).getOrElse(
-            "unrecorded — the commit predates fingerprint recording")}, " +
-          s"caller's $sig2) — re-pinning the meta would put the corpus " +
-          "under a benchmark its verdict state was never evaluated " +
-          "against; replay a regate only with its original benchmark")
+          s"${storedSig.getOrElse("none")}, caller's $sig2) — re-pinning " +
+          "the meta would put the corpus under a benchmark its verdict " +
+          "state was never evaluated against; replay a regate only with its original benchmark")
       repinMeta()
       cleanupAfterCommit(spark, outDir, epochId, None)
       pruneQuarBefore(spark, outDir, epochId)
@@ -2419,9 +2218,6 @@ object Pipeline {
     val last = committed.maxOption.getOrElse(throw new IllegalArgumentException(
       s"$outDir has no committed epoch to regate"))
     val st = loadEpochState(spark, outDir, last, useCache = false)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$outDir's newest epoch $last predates the commit-artifact " +
-          "layout; run one epoch to migrate before regating"))
 
     // IN-FLIGHT fingerprint, recorded BEFORE the regate's first durable
     // write: the quarantine consolidation and staging are keyed only by
@@ -2678,10 +2474,8 @@ object Pipeline {
         .select(col("lang"), col("source"), col("docs_contaminated"))
         .collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      for {
-        e <- committedEpochs(spark, outDir).maxOption
-        st <- loadEpochState(spark, outDir, e, useCache = false)
-      } {
+      committedEpochs(spark, outDir).maxOption.foreach { e =>
+        val st = loadEpochState(spark, outDir, e, useCache = false)
         val fromRollup = st.rollup.map { case (k, v) => k -> v.docsContam }
         if (fromReport != fromRollup)
           throw new IllegalStateException(

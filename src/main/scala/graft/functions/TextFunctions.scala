@@ -34,15 +34,6 @@ object TextFunctions {
   def hash60Sql(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast(LongType)
 
-  /** Word n-gram shingles as an array column (distinct not applied). */
-  def wordShingles(c: Column, n: Int): Column = {
-    val toks = wsTokens(c)
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + lit(1), lit(n)))))
-      .otherwise(array())
-  }
-
   /** "BPE-ish" subword token count: word chars runs + single punctuation
     * marks, via one regexp pass (same RE2/Java-compatible pattern as the
     * oracle's `regexp_extract_all`).

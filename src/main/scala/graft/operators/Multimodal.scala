@@ -41,14 +41,6 @@ object Multimodal {
         (lit(1) + pmod(col("n_chars"), lit(48))).cast("int").as("height"),
         col("n_chars").as("n_bytes")).as("meta"))
 
-  /** STUB decode: 8 pseudo-features from the blob's md5 (deterministic fake
-    * for the missing codec). Real impl would replace the md5 derivation
-    * with pixel/sample statistics.
-    */
-  def featureStub(media: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    transform(sequence(lit(0), lit(7)), j =>
-      conv(substring(md5(media), j * 2 + lit(1), lit(2)), 16, 10).cast("double") / 255.0)
-
   /** Resize stub: truncate the blob (a real thumbnailer slots in here). */
   def resizeStub(media: org.apache.spark.sql.Column, nBytes: Int): org.apache.spark.sql.Column =
     substring(media, 1, nBytes)

@@ -166,13 +166,6 @@ object Similarity {
     (index, cents)
   }
 
-  /** Convenience API: the seed-centroid index table alone, for callers that
-    * manage probing themselves (the in-repo queries go through [[ivfTopK]],
-    * which uses [[ivfBuild]] directly).
-    */
-  def ivfIndex(e: DataFrame, nlist: Int): DataFrame =
-    ivfBuild(e, nlist)._1
-
   /** IVF-probed approximate top-k: score only vectors in the query's
     * `nprobe` nearest cells.
     *

@@ -69,9 +69,14 @@ object KafkaTestSource {
     */
   val TimestampBaseMicros: Long = 1767225600000000L
 
-  /** Partition-sticky user id for (partition, offset). */
+  /** Partition-sticky user id for (partition, offset): partition p owns
+    * the ids from p × stride, stride = max(1000, keysPerPartition), so no
+    * two partitions share a key (ids for ≤ 1000 keys per partition are
+    * p × 1000 + offset % keysPerPartition).
+    */
   def uid(partition: Int, offset: Long, keysPerPartition: Int): Long =
-    partition.toLong * 1000L + (offset % keysPerPartition)
+    partition.toLong * math.max(1000L, keysPerPartition.toLong) +
+      (offset % keysPerPartition)
 
   /** Deterministic payload fields for (partition, offset). */
   def eventType(offset: Long): String = "e" + (offset % 3)
@@ -95,14 +100,19 @@ private[sources] final case class KafkaTestConfig(topic: String, partitions: Int
     maxOffsetsPerTrigger: Option[Long])
 
 private[sources] object KafkaTestConfig {
-  def from(options: CaseInsensitiveStringMap): KafkaTestConfig = KafkaTestConfig(
-    topic = options.getOrDefault("topic", "test-topic"),
-    partitions = options.getInt("partitions", 2),
-    recordsPerPartition = options.getLong("recordsPerPartition", 10L),
-    keysPerPartition = options.getInt("keysPerPartition", 5),
-    startingOffset = options.getLong("startingOffset", 0L),
-    maxOffsetsPerTrigger =
-      Option(options.get("maxOffsetsPerTrigger")).map(_.toLong))
+  def from(options: CaseInsensitiveStringMap): KafkaTestConfig = {
+    val keysPerPartition = options.getInt("keysPerPartition", 5)
+    require(keysPerPartition >= 1,
+      s"kafka-test keysPerPartition must be at least 1, got $keysPerPartition")
+    KafkaTestConfig(
+      topic = options.getOrDefault("topic", "test-topic"),
+      partitions = options.getInt("partitions", 2),
+      recordsPerPartition = options.getLong("recordsPerPartition", 10L),
+      keysPerPartition = keysPerPartition,
+      startingOffset = options.getLong("startingOffset", 0L),
+      maxOffsetsPerTrigger =
+        Option(options.get("maxOffsetsPerTrigger")).map(_.toLong))
+  }
 }
 
 /** Per-partition offsets; `json` is the checkpointed form (A6). */

@@ -143,16 +143,4 @@ object Sources {
     */
   def orcBatch(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
-
-  /** CSV replay stream. */
-  def csvStream(spark: SparkSession, dir: String, schema: StructType,
-      header: Boolean = true, maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream.schema(schema).option("header", header.toString)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString).csv(dir)
-
-  /** JSON-lines replay stream. */
-  def jsonStream(spark: SparkSession, dir: String, schema: StructType,
-      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString).json(dir)
 }

@@ -71,12 +71,14 @@ class PipelineIncrSpecCommit extends PipelineIncrBase {
     val ckpt = Files.createTempDirectory("graft-incr-ckpt").toString
     def writeChunk(lo: Long, hi: Long): Unit =
       chunk(lo, hi).coalesce(1).write.mode("append").parquet(replayDir)
+    var inputRows = 0L
     def run(): Unit = {
       val schema = spark.read.parquet(replayDir).schema
       val q = Pipeline.startIncremental(
         Sources.fileStream(spark, replayDir, schema, maxFilesPerTrigger = 1),
         out, ckpt, Shards)
       q.processAllAvailable()
+      inputRows += q.recentProgress.map(_.numInputRows).sum
       q.stop()
     }
     writeChunk(250, Long.MaxValue)
@@ -87,6 +89,9 @@ class PipelineIncrSpecCommit extends PipelineIncrBase {
     val oneShot = Pipeline.curate(spark, dir,
       Files.createTempDirectory("graft-incr-sref").toString, Shards)
     assertEqualsOneShot(out, oneShot)
+    // an epoch scans its micro-batch once: the stream's input counts
+    // equal the documents delivered, not a multiple of them
+    assert(inputRows === spark.read.parquet(replayDir).count())
   }
 
   test("a crash during the corpus overwrite replays from staging without data loss") {
@@ -240,58 +245,6 @@ class PipelineIncrSpecCommit extends PipelineIncrBase {
     }
   }
 
-  test("a state dir written by the pre-delta layout migrates and continues, not crashes") {
-    import graft.operators.{Curation, Layout}
-    // fabricate the round-10 layout exactly: batch-keyed sigs + winv
-    // state, a committed 5-column verdict set, and the artifacts a
-    // completed epoch leaves behind — no fpcnt, no extended columns
-    val out = Files.createTempDirectory("graft-incr-legacy").toString
-    val c0 = chunk(150, Long.MaxValue)
-    val base = c0.select(col("doc_id"), col("lang"), col("source"),
-      graft.functions.TextFunctions.wsTokens(col("text")).as("toks"))
-    Curation.docSignals(base)
-      .write.parquet(s"$out/state/sigs/batch=0")
-    Curation.winFpsOver(base.select(col("doc_id"), col("toks")), Curation.SubWidth)
-      .write.parquet(s"$out/state/winv/batch=0")
-    val sigs0 = spark.read.parquet(s"$out/state/sigs")
-      .select(col("doc_id"), col("lang"), col("source"),
-        col("n_tok"), col("h"), col("bag")).distinct()
-    val winv0 = spark.read.parquet(s"$out/state/winv")
-      .select(col("doc_id"), col("fp")).distinct()
-    val v5 = Curation.verdictsFrom(sigs0, winv0).localCheckpoint()
-    assert(v5.columns.toSeq ===
-      Seq("doc_id", "lang", "source", "n_tok", "kept"), "legacy schema")
-    val kept0 = v5.filter(col("kept"))
-      .select(col("doc_id"), col("lang"), col("source"), col("n_tok"))
-      .join(c0.select(col("doc_id"), col("text")), Seq("doc_id"))
-      .withColumn("shard", Layout.shardKey(col("doc_id"), Shards))
-    kept0.write.partitionBy("shard").parquet(s"$out/corpus")
-    Layout.shardManifest(spark.read.parquet(s"$out/corpus")
-        .select(col("doc_id"), col("text")), Shards)
-      .write.parquet(s"$out/manifest")
-    spark.range(1).select(lit(Shards).as("num_shards"))
-      .write.parquet(s"$out/meta")
-    Curation.funnelRollup(v5).write.parquet(s"$out/report")
-    v5.write.parquet(s"$out/state/verdicts/epoch=0")
-    // a legacy full-text mirror rides along: once consumed by the
-    // migration it must be DELETED, not kept on disk forever
-    c0.select(col("doc_id"), col("text")).write.parquet(s"$out/state/texts")
-    // the NEW code must rebuild its delta state from sigs+winv and fold
-    // the next (overlapping, keeper-displacing) chunk to convergence
-    val r1 = Pipeline.curateEpoch(chunk(0, 160), out, Shards, 1L)
-    assert(r1.docsSeen === Fixtures.documents(spark, dir).count())
-    val oneShot = Pipeline.curate(spark, dir,
-      Files.createTempDirectory("graft-incr-legacy-ref").toString, Shards)
-    assertEqualsOneShot(out, oneShot)
-    // the migration consumed the legacy dirs exactly once — after the gen3
-    // commit none of them (incl. the full-text mirror) may survive
-    Seq("sigs", "texts", "verdicts", "fpmap", "epochres").foreach { d =>
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$out/state/$d")),
-        s"legacy state/$d must be deleted once the gen3 commit lands")
-    }
-  }
-
   test("fp-count state is bucket-incremental: a small epoch rewrites only its touched buckets") {
     val out = Files.createTempDirectory("graft-incr-bkt").toString
     // the tail doc: the SHORTEST doc that still has windows (>= 20 tokens)
@@ -416,70 +369,61 @@ class PipelineIncrSpecCommit extends PipelineIncrBase {
     assertEqualsOneShot(out, oneShot)
   }
 
-  test("a transitional flat-fpcnt state dir (extended verdicts, no fpmap) re-buckets and continues") {
-    import graft.operators.{Curation, Layout}
-    // fabricate the intra-round transitional layout: extended verdict
-    // state + a FLAT (un-bucketed) fpcnt dir, winv log, no pointer map
-    val out = Files.createTempDirectory("graft-incr-flatfp").toString
-    val c0 = chunk(150, Long.MaxValue)
-    val base = c0.select(col("doc_id"), col("lang"), col("source"),
-      graft.functions.TextFunctions.wsTokens(col("text")).as("toks"))
-    Curation.winFpsOver(base.select(col("doc_id"), col("toks")), Curation.SubWidth)
-      .write.parquet(s"$out/state/winv/batch=0")
-    val winv0 = spark.read.parquet(s"$out/state/winv")
-      .select(col("doc_id"), col("fp")).distinct()
-    val vFull = Curation.verdictsFullFrom(
-      Curation.docSignals(base), winv0).localCheckpoint()
-    winv0.groupBy(col("fp")).agg(count(lit(1)).as("nd"))
-      .write.parquet(s"$out/state/fpcnt/epoch=0") // FLAT: no bucket dirs
-    val kept0 = vFull.filter(col("kept"))
-      .select(col("doc_id"), col("lang"), col("source"), col("n_tok"))
-      .join(c0.select(col("doc_id"), col("text")), Seq("doc_id"))
-      .withColumn("shard", Layout.shardKey(col("doc_id"), Shards))
-    kept0.write.partitionBy("shard").parquet(s"$out/corpus")
-    Layout.shardManifest(spark.read.parquet(s"$out/corpus")
-        .select(col("doc_id"), col("text")), Shards)
-      .write.parquet(s"$out/manifest")
+  test("an outDir written by an outdated state layout is refused before any write") {
+    val bench = Fixtures.documents(spark, dir)
+      .select(col("doc_id"), col("text"))
+      .filter(size(split(col("text"), " ")) >= 8)
+      .orderBy(col("doc_id")).limit(2).localCheckpoint()
+    def copyTree(from: String): String = {
+      val to = Files.createTempDirectory("graft-incr-outdated").toString
+      val src = java.nio.file.Paths.get(from)
+      Files.walk(src).forEach { p =>
+        val dst = java.nio.file.Paths.get(to, src.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(dst)
+        else Files.copy(p, dst)
+      }
+      to
+    }
+    // pre-delta layout: a meta with only num_shards and committed verdicts
+    val preDelta = Files.createTempDirectory("graft-incr-predelta").toString
     spark.range(1).select(lit(Shards).as("num_shards"))
-      .write.parquet(s"$out/meta")
-    Curation.funnelRollup(vFull).write.parquet(s"$out/report")
-    vFull.write.parquet(s"$out/state/verdicts/epoch=0")
-    // new code must force a compacting re-bucket, prune the flat dir once
-    // unreferenced, and converge
-    Pipeline.curateEpoch(chunk(0, 160), out, Shards, 1L)
-    val oneShot = Pipeline.curate(spark, dir,
-      Files.createTempDirectory("graft-incr-flatfp-ref").toString, Shards)
-    assertEqualsOneShot(out, oneShot)
-    assert(ptrOf(out, 1L, "fp").values.flatten.toSet === Set(1L),
-      "compaction must point every bucket at the migrating epoch")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$out/state/fpcnt/epoch=0")),
-      "the unreferenced flat fpcnt dir must be pruned")
+      .write.parquet(s"$preDelta/meta")
+    chunk(150, Long.MaxValue).select(col("doc_id"), col("lang"),
+        col("source"), lit(1L).as("n_tok"), lit(true).as("kept"))
+      .write.parquet(s"$preDelta/state/verdicts/epoch=0")
+    // current gated founding epoch, then one copy per stripped row kind
+    val founded = Files.createTempDirectory("graft-incr-current").toString
+    Pipeline.curateEpoch(chunk(100, Long.MaxValue), founded, Shards, 0L,
+      Some(bench))
+    def withoutKind(kind: String): String = {
+      val out = copyTree(founded)
+      val commit = s"$out/state/commit/epoch=0"
+      spark.read.parquet(commit).filter(col("kind") =!= kind)
+        .localCheckpoint().write.mode("overwrite").parquet(commit)
+      out
+    }
+    val outdated = Seq("pre-delta" -> preDelta,
+      "no k rows" -> withoutKind("k"), "no wvc rows" -> withoutKind("wvc"))
+    def snapshot(out: String): Map[String, String] = {
+      val root = java.nio.file.Paths.get(out)
+      Files.walk(root).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .map(p => root.relativize(p).toString -> (
+          if (Files.isDirectory(p)) "dir"
+          else java.security.MessageDigest.getInstance("MD5")
+            .digest(Files.readAllBytes(p)).map("%02x".format(_)).mkString))
+        .toMap
+    }
+    outdated.foreach { case (name, out) =>
+      val before = snapshot(out)
+      val eEpoch = intercept[IllegalArgumentException] {
+        Pipeline.curateEpoch(chunk(0, 120), out, Shards, 1L, Some(bench))
+      }
+      assert(eEpoch.getMessage.contains("re-found"), s"$name: ${eEpoch.getMessage}")
+      val eRegate = intercept[IllegalArgumentException] {
+        Pipeline.regate(spark, out, bench, 1L)
+      }
+      assert(eRegate.getMessage.contains("re-found"), s"$name: ${eRegate.getMessage}")
+      assert(snapshot(out) === before, s"$name: a refused outDir must be left untouched")
+    }
   }
-
-  test("a crashed epoch staged by the flat (pre-partitioned) layout replays without shard loss") {
-    // upgrade scenario: the crash happened under the old code, whose
-    // staging was flat parquet with shard as a data column — the replay
-    // must NOT read an empty shard-dir listing and delete changed shards
-    val out = Files.createTempDirectory("graft-incr-flatstage").toString
-    Pipeline.curateEpoch(chunk(100, Long.MaxValue), out, Shards, 0L)
-    Pipeline.failAfterStaging = true
-    try intercept[IllegalStateException] {
-      Pipeline.curateEpoch(chunk(0, 120), out, Shards, 1L)
-    } finally Pipeline.failAfterStaging = false
-    // rewrite the committed staging into the OLD flat layout
-    val stagingPath = s"$out/state/staging/epoch=1/base=0"
-    val staged = spark.read.parquet(stagingPath)
-      .select(col("doc_id"), col("lang"), col("source"), col("n_tok"),
-        col("text"), col("shard")).localCheckpoint()
-    val sdir = java.nio.file.Paths.get(stagingPath)
-    Files.walk(sdir).toArray.map(_.asInstanceOf[java.nio.file.Path])
-      .filter(_ != sdir).sortBy(-_.getNameCount).foreach(Files.delete)
-    staged.write.mode("overwrite").parquet(stagingPath) // flat, _SUCCESS
-    Pipeline.curateEpoch(chunk(0, 120), out, Shards, 1L)
-    val oneShot = Pipeline.curate(spark, dir,
-      Files.createTempDirectory("graft-incr-flatstage-ref").toString, Shards)
-    assertEqualsOneShot(out, oneShot)
-  }
-
 }

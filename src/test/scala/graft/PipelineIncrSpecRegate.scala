@@ -73,7 +73,7 @@ class PipelineIncrSpecRegate extends PipelineIncrBase {
     assertEqualsOneShot(out, oneShot)
   }
 
-  test("regate preconditions fail loudly: gate-off, pre-winc, out-of-order") {
+  test("regate preconditions fail loudly: gate-off, out-of-order") {
     val sq = spark
     import sq.implicits._
     val bench = Fixtures.documents(spark, dir)
@@ -87,15 +87,6 @@ class PipelineIncrSpecRegate extends PipelineIncrBase {
       Pipeline.regate(spark, plain, bench, 1L)
     }
     assert(eOff.getMessage.contains("gate-off"))
-    // gated dir founded before the winc log existed (meta lacks the flag)
-    val old = Files.createTempDirectory("graft-incr-rg-old").toString
-    Pipeline.curateEpoch(chunk(200, Long.MaxValue), old, Shards, 0L, Some(bench))
-    val m = spark.read.parquet(s"$old/meta").drop("winc").localCheckpoint()
-    m.write.mode("overwrite").parquet(s"$old/meta")
-    val ePre = intercept[IllegalArgumentException] {
-      Pipeline.regate(spark, old, bench, 1L)
-    }
-    assert(ePre.getMessage.contains("winc") || ePre.getMessage.contains("log"))
     // an id at or below a committed epoch is rejected
     val g = Files.createTempDirectory("graft-incr-rg-ooo").toString
     Pipeline.curateEpoch(chunk(200, Long.MaxValue), g, Shards, 0L, Some(bench))
@@ -211,45 +202,6 @@ class PipelineIncrSpecRegate extends PipelineIncrBase {
     val oneShot = Pipeline.curate(spark, dir,
       Files.createTempDirectory("graft-incr-orph-ref").toString, Shards)
     assertEqualsOneShot(out, oneShot)
-  }
-
-  test("a commit without explicit chunk liveness still reads its chunks and never prunes them") {
-    // upgrade path: chunk-writing code that predates the wvc rows left
-    // commits whose wvChunks read back empty — the reader must fall back
-    // to the disk listing (or crossings silently undercount) and the
-    // orphan cleanup must NOT treat the live chunks as orphans
-    val out0 = Files.createTempDirectory("graft-incr-nowvc0").toString
-    Pipeline.curateEpoch(chunk(0, Long.MaxValue), out0, Shards, 0L)
-    val commit = spark.read.parquet(s"$out0/state/commit/epoch=0")
-      .localCheckpoint()
-    commit.filter(col("kind") =!= "wvc").localCheckpoint()
-      .write.mode("overwrite").parquet(s"$out0/state/commit/epoch=0")
-    val out = Files.createTempDirectory("graft-incr-nowvc").toString
-    java.nio.file.Files.walk(java.nio.file.Paths.get(out0)).forEach { src =>
-      val dst = java.nio.file.Paths.get(out,
-        java.nio.file.Paths.get(out0).relativize(src).toString)
-      if (java.nio.file.Files.isDirectory(src))
-        java.nio.file.Files.createDirectories(dst)
-      else java.nio.file.Files.copy(src, dst)
-    }
-    // a synthetic duplicate of one short doc: its fps CROSS, so the
-    // epoch must actually read the chunked log to count the flip
-    val src = Fixtures.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), col("source"), col("text"),
-        size(split(col("text"), " ")).as("n"))
-      .filter(col("n") >= 20).orderBy(col("n"), col("doc_id")).limit(1)
-      .localCheckpoint()
-    val dup = src.select(lit(9999998L).as("doc_id"), col("lang"),
-      col("source"), col("text"))
-    Pipeline.curateEpoch(dup, out, Shards, 1L)
-    val srcId = src.head().getLong(0)
-    val flipped = spark.read.parquet(s"$out/state/vbkt/epoch=1")
-      .filter(col("doc_id") === srcId)
-    assert(flipped.count() === 1 && flipped.head().getAs[Long]("n_dup") > 0L,
-      "the fallback chunk read must surface the crossing flip")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$out/state/winvc/chunk=0")),
-      "live chunks of a liveness-less commit must survive cleanup")
   }
 
   test("an empty founding batch neither derails the run nor claims the founding chunk") {

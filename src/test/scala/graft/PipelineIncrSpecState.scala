@@ -414,38 +414,6 @@ class PipelineIncrSpecState extends PipelineIncrBase {
         "would read them all)")
   }
 
-  test("a pre-keeper gen3 state migrates the keeper family once and continues") {
-    // upgrade path: a commit artifact written before the kbkt family
-    // existed has no 'k' pointer rows — the next epoch must fold the
-    // keepers out of the verdict state exactly once and continue
-    val out0 = Files.createTempDirectory("graft-incr-kmig0").toString
-    Pipeline.curateEpoch(chunk(100, Long.MaxValue), out0, Shards, 0L)
-    // strip the keeper family: delete its dirs, drop its pointer rows
-    val kdir = java.nio.file.Paths.get(s"$out0/state/kbkt")
-    Files.walk(kdir).toArray.map(_.asInstanceOf[java.nio.file.Path])
-      .sortBy(-_.getNameCount).foreach(Files.delete)
-    val commit = spark.read.parquet(s"$out0/state/commit/epoch=0")
-      .localCheckpoint()
-    commit.filter(col("kind") =!= "k")
-      .localCheckpoint()
-      .write.mode("overwrite").parquet(s"$out0/state/commit/epoch=0")
-    val out = Files.createTempDirectory("graft-incr-kmig").toString
-    java.nio.file.Files.walk(java.nio.file.Paths.get(out0)).forEach { src =>
-      val dst = java.nio.file.Paths.get(out,
-        java.nio.file.Paths.get(out0).relativize(src).toString)
-      if (java.nio.file.Files.isDirectory(src))
-        java.nio.file.Files.createDirectories(dst)
-      else java.nio.file.Files.copy(src, dst)
-    }
-    // descending overlap: displacement must work through the migration
-    Pipeline.curateEpoch(chunk(0, 120), out, Shards, 1L)
-    assert(ptrOf(out, 1L, "k").values.flatten.toSet === Set(1L),
-      "the migration must point every keeper bucket at the migrating epoch")
-    val oneShot = Pipeline.curate(spark, dir,
-      Files.createTempDirectory("graft-incr-kmig-ref").toString, Shards)
-    assertEqualsOneShot(out, oneShot)
-  }
-
   test("the window log chunks: founding bucketed at birth, tails fold, flats stay bounded") {
     val out = Files.createTempDirectory("graft-incr-winvc").toString
     val cuts = (0 to 10).map(i => i * 15L)

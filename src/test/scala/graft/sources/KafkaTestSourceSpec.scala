@@ -57,6 +57,23 @@ class KafkaTestSourceSpec extends AnyFunSuite {
       .foreach(r => assert(r.getLong(1) / 1000 == r.getInt(0).toLong))
   }
 
+  test("more than 1000 keys per partition stay partition-disjoint; fewer than 1 is rejected") {
+    def read(keys: Int) = spark.read.format("kafka-test")
+      .option("partitions", "2").option("recordsPerPartition", "2000")
+      .option("keysPerPartition", keys.toString).load()
+    val keysOf = read(1500)
+      .select(col("partition"), col("key").cast("string").cast("long"))
+      .collect().groupBy(_.getInt(0))
+      .map { case (p, rs) => p -> rs.map(_.getLong(1)).toSet }
+    assert(keysOf.keySet == Set(0, 1))
+    assert(keysOf.values.forall(_.size == 1500))
+    assert((keysOf(0) & keysOf(1)).isEmpty,
+      "a key must belong to exactly one partition")
+    val e = intercept[Exception](read(0).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("keysPerPartition")))
+  }
+
   test("startingOffset skips the log prefix (the A6 offset-range read)") {
     val df = Sources.kafkaTestBatch(spark, "t", partitions = 2,
       recordsPerPartition = 6, startingOffset = 4)
