@@ -1,8 +1,9 @@
 package graft
 
 import graft.operators.{Curation, Layout}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** End-to-end curation run — the library's USER-FACING entry: evaluate the
   * q139 funnel gates ONCE, materialize the kept corpus hash-sharded to
@@ -136,30 +137,11 @@ object Pipeline {
   @volatile private[graft] var testEpochBarrier
       : Option[java.util.concurrent.CyclicBarrier] = None
 
-  /** Hash-bucket count of the per-fp count state
-    * (`state/fpcnt/epoch=<e>/bucket=pmod(fp, FpBuckets)`). A layout
-    * constant: changing it is safe — the stored count rides the commit
-    * artifact's pointer rows, and a mismatch triggers a compacting
-    * re-bucket — but pick it for the deployment (more buckets = finer
-    * epoch pruning; at 100 TB thousands, here 64 so fixture batches
-    * exercise real pruning).
-    */
-  private[graft] val FpBuckets = 64
-
-  /** Hash-bucket count of the doc-scale verdict state
-    * (`state/vbkt/epoch=<e>/bucket=pmod(xxhash64(doc_id), VBuckets)`).
-    * Same contract as [[FpBuckets]]: a layout constant with a compacting
-    * re-bucket on change; an epoch reads and rewrites only the buckets
-    * holding its batch's docs plus the docs its deltas flip, so verdict
-    * I/O is batch-bound, not corpus-bound.
-    */
-  private[graft] val VBuckets = 64
-
-  /** Per-BUCKET layer fan-out bound of the bucketed state families:
-    * the rolling fold ([[rollSet]]) keeps every bucket's pointer list at
+  /** Per-BUCKET layer fan-out bound of the bucketed delta logs: the
+    * rolling fold ([[rollSet]]) keeps every bucket's pointer list at
     * ≤ this many layers by folding a bucket slice each epoch (no
     * all-at-once compaction cliff), which also bounds the dead
-    * superseded rows old layers accumulate. Doubles as the window-log
+    * superseded rows old layers accumulate. Doubles as the batch-log
     * chunk-fold trigger (fold the flat tails once this many accumulate).
     */
   private[graft] val FpCompactAt = 8
@@ -193,60 +175,405 @@ object Pipeline {
       v.toLong
     }.getOrElse(4L << 20)
 
-  private def fpBucket(fp: Column): Column =
-    pmod(fp, lit(FpBuckets.toLong)).cast("int")
-
-  /** Verdict-state bucket of a doc id — hashed (not `pmod(doc_id, …)`)
-    * so sequential or skewed id schemes still spread evenly.
+  /** A bucketed delta log's committed extent: `bucket -> every layer
+    * holding live rows for it`, oldest first (layer id: positive e = the
+    * `epoch=e` dir — a tail delta, or a founding/re-bucket full copy;
+    * negative -e = the `fold=e` dir — a rolling fold of a bucket subset
+    * written at epoch e), plus the bucket count the layers were written
+    * under.
     */
-  private def vBucket(id: Column): Column =
-    pmod(xxhash64(id), lit(VBuckets.toLong)).cast("int")
+  private[graft] final case class Layers(ptr: Map[Int, Seq[Long]], nb: Int)
 
-  /** Hash-bucket count of the bag-keyed keeper side-state
-    * (`state/kbkt`, rows `(bag, keeper)`): the current bag-dedup keeper
-    * per distinct bag, maintained so the displacement probe reads only
-    * the buckets of the batch's bags instead of scanning every verdict
-    * layer (the last O(corpus-docs) read a steady epoch used to pay).
-    * Same layout contract as [[VBuckets]].
+  /** An append-only batch log's committed extent: flat `batch=` dirs
+    * ≤ `folded` are folded into chunks (-1 = none), and `chunks` are the
+    * LIVE `chunk=` dirs. Liveness is explicit, so a chunk written by a
+    * crashed epoch whose batch later re-processed under a different id
+    * (replaced checkpoint) is an orphan cleanup deletes, never a silent
+    * duplicate in every read.
     */
-  private[graft] val KBuckets = 64
+  private[graft] final case class Batches(folded: Long, chunks: Seq[Long])
 
-  private def kBucket(bag: Column): Column =
-    pmod(xxhash64(bag), lit(KBuckets.toLong)).cast("int")
-
-  /** Append `epochId` to each touched bucket's layer list — the ONE copy
-    * of the pointer-forward rule shared by the bucketed state families.
+  /** BUCKETED DELTA LOG — the one shape of the keyed epoch state
+    * (`state/<dir>/epoch=<e>|fold=<e>`, rows hashed by `key` into
+    * `nBuckets` buckets). An epoch APPENDS only its own rows as a new
+    * layer, the commit artifact's `kind` pointer rows record which layers
+    * hold live rows per bucket, and readers MERGE a bucket's pointed
+    * layers: `summed` value columns add up, otherwise the newest row per
+    * key wins. Layout by layer role: FULL-copy layers (the founding write,
+    * a re-bucket, a rolling fold — the state-scale layers reads must
+    * prune) are bucket=-PARTITIONED dirs; a tail DELTA is written FLAT
+    * (`bucket` a data column), because partitionBy on a batch-scale write
+    * fans each task into up to `nBuckets` tiny files — ≈1 s of per-file
+    * commit overhead every epoch for a layer whose reads are batch-scale
+    * row filters anyway. One read schema resolves `bucket` either way.
+    * `nBuckets` is a layout constant: the stored count rides the pointer
+    * rows, and a mismatch makes the next write a compacting re-bucket
+    * (more buckets = finer pruning; at 100 TB thousands, here 64 so
+    * fixture batches exercise real pruning).
     */
-  private def appendPtr(base: Map[Int, Seq[Long]], touched: Iterable[Int],
-      epochId: Long): Map[Int, Seq[Long]] =
-    base ++ touched.map(b =>
-      b -> (base.getOrElse(b, Seq.empty) :+ epochId))
+  private[graft] final class BucketLog(dir: String, kind: String,
+      val nBuckets: Int, key: String, hash: Column => Column,
+      summed: Boolean, empty: SparkSession => DataFrame) {
 
-  /** The three bucketed families take rolling-fold turns — ONE fold
-    * write per epoch instead of three, because a fold's cost at tail
-    * scale is mostly fixed (a partitioned write's file fan-out + job
-    * round-trips), not bandwidth. A family also folds OUT of turn when
-    * any of its buckets hits the hard fan-out bound (a starvation
-    * backstop for heartbeat-aligned streams whose real epochs land on a
-    * fixed residue).
+    def none: Layers = Layers(Map.empty, nBuckets)
+
+    def bucket(k: Column): Column =
+      pmod(hash(k), lit(nBuckets.toLong)).cast("int")
+
+    private def withBucket(df: DataFrame): DataFrame =
+      df.withColumn("bucket", bucket(col(key)))
+
+    private def schema(spark: SparkSession): StructType =
+      stateSchemas.getOrElseUpdate(dir, withBucket(empty(spark)).schema)
+
+    private def cols(spark: SparkSession): Seq[String] =
+      schema(spark).fieldNames.toSeq.filterNot(_ == "bucket")
+
+    private def layerDir(outDir: String, id: Long): String =
+      if (id >= 0L) s"$outDir/state/$dir/epoch=$id"
+      else s"$outDir/state/$dir/fold=${-id}"
+
+    /** The pointed layers as one frame, each row tagged with a `_layer`
+      * rank (higher = newer), each layer filtered to the buckets whose
+      * pointer list CONTAINS it (intersected with `only`). That per-layer
+      * filter is the liveness rule that makes rolling folds sound: after
+      * bucket b folds at epoch e (pointer reset to [-e]), older layers
+      * still hold b's superseded rows for as long as OTHER buckets
+      * reference them. `only` prunes only when the layers were written
+      * under the CURRENT bucket count — probe bucket sets use the current
+      * hash, so pruning old-constant partitions with them would drop live
+      * rows one epoch before the re-bucket (which reads everything
+      * anyway). Rank order is by (|id|, sign); no bucket's list holds both
+      * the fold and the delta of one epoch, so the sign never decides.
+      * Callers shrink the rows FIRST (semi-joins, presence probes) and
+      * only then [[merge]], so a steady epoch never materializes a merged
+      * view.
+      */
+    def read(spark: SparkSession, outDir: String, l: Layers,
+        only: Option[Iterable[Int]]): DataFrame = {
+      val sel = cols(spark).map(col)
+      val prune = only.filter(_ => l.nb == nBuckets).map(_.toSet)
+      val wanted = prune.map(b => l.ptr.view.filterKeys(b).toMap).getOrElse(l.ptr)
+      wanted.values.flatten.toSeq.distinct
+        .sortBy((id: Long) => (math.abs(id), id)).zipWithIndex
+        .map { case (id, rank) =>
+          val live = l.ptr.iterator
+            .collect { case (b, es) if es.contains(id) => b }.toSet
+          spark.read.schema(schema(spark)).parquet(layerDir(outDir, id))
+            .filter(col("bucket").isInCollection(
+              prune.map(_ & live).getOrElse(live).toSeq.sorted))
+            .select(sel: _*).withColumn("_layer", lit(rank))
+        }
+        .reduceOption(_ unionByName _)
+        .getOrElse(empty(spark).select(sel: _*).withColumn("_layer", lit(0)))
+    }
+
+    /** One merged row per key of ranked rows — a single aggregation, so
+      * it exchanges exactly the rows handed in. A row's bucket is a pure
+      * hash of its key, so bucket pruning never splits a key across
+      * layers.
+      */
+    def merge(rows: DataFrame): DataFrame = {
+      val vals = cols(rows.sparkSession).filterNot(_ == key)
+      if (summed) rows.groupBy(col(key)).agg(sum(col(vals.head)).as(vals.head),
+        vals.tail.map(c => sum(col(c)).as(c)): _*)
+      else rows.groupBy(col(key))
+        .agg(max_by(struct(vals.map(col): _*), col("_layer")).as("_s"))
+        .select(col(key) +: vals.map(c => col("_s." + c)): _*)
+    }
+
+    /** Write `rows` (with `bucket`) as epoch `epochId`'s partitioned full
+      * copy; every written bucket then points at it alone, read off the
+      * free directory listing.
+      */
+    def writeFull(spark: SparkSession, outDir: String, epochId: Long,
+        rows: DataFrame): Layers = {
+      val d = layerDir(outDir, epochId)
+      rows.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(d)
+      Layers(childIds(spark, d, "bucket=").map(_.toInt -> Seq(epochId)).toMap,
+        nBuckets)
+    }
+
+    /** Epoch `epochId`'s layer. `delta` is the epoch's own rows with
+      * `bucket`, coalesced to its write parallelism (coalesce, never a
+      * state-keyed exchange); `touched` is its exact bucket set, known on
+      * the driver, so no write needs a listing or read-back job. State
+      * written under another bucket count re-buckets into one full copy
+      * (its merge with the delta as the newest layer); the founding delta
+      * IS the full copy; a later delta lands flat and is appended to its
+      * buckets' lists; an empty one writes nothing.
+      */
+    def append(spark: SparkSession, outDir: String, epochId: Long,
+        base: Layers, delta: DataFrame, touched: Iterable[Int]): Layers =
+      if (base.ptr.nonEmpty && base.nb != nBuckets)
+        writeFull(spark, outDir, epochId, withBucket(merge(
+          read(spark, outDir, base, None).unionByName(
+            delta.select(cols(spark).map(col): _*)
+              .withColumn("_layer", lit(Int.MaxValue))))).coalesce(8))
+      else if (touched.isEmpty) base
+      else if (base.ptr.isEmpty) writeFull(spark, outDir, epochId, delta)
+      else {
+        delta.write.mode(SaveMode.Overwrite).parquet(layerDir(outDir, epochId))
+        Layers(base.ptr ++ touched.map(b =>
+          b -> (base.ptr.getOrElse(b, Seq.empty) :+ epochId)), nBuckets)
+      }
+
+    /** The buckets this log folds at `epochId` ([[rollSet]]). The three
+      * logs take turns — ONE fold write per epoch instead of three, since
+      * a fold's cost at tail scale is mostly fixed (file fan-out + job
+      * round-trips), not bandwidth — and a log also folds OUT of turn
+      * when any bucket hits the hard fan-out bound (a starvation backstop
+      * for streams whose real epochs land on a fixed residue).
+      */
+    def rolled(epochId: Long, l: Layers): Set[Int] =
+      if (BucketLogs(((epochId % 3) + 3).toInt % 3) == this ||
+          l.ptr.values.exists(_.size >= FpCompactAt)) rollSet(l.ptr, nBuckets)
+      else Set.empty
+
+    /** The rolling fold: the merged rows of the rolled buckets ([[merge]],
+      * or `merged` — which must carry `bucket`) land bucket-partitioned
+      * under `fold=<epochId>`, and those buckets' lists reset to the fold
+      * alone. Write parallelism comes from the driver-listed bytes of the
+      * layers they reference (an overestimate — layers hold other buckets
+      * too — of the right order, from free FS metadata). Pure in
+      * (`l`, `epochId`), so a crash replay folds the same slice.
+      */
+    def roll(spark: SparkSession, outDir: String, epochId: Long, l: Layers,
+        merged: Option[Set[Int] => DataFrame]): Layers = {
+      val slice = rolled(epochId, l)
+      if (slice.isEmpty) l
+      else {
+        val refBytes = l.ptr.view.filterKeys(slice).values.flatten.toSet
+          .iterator.map((id: Long) => dirBytes(spark, layerDir(outDir, id))).sum
+        val foldDir = s"$outDir/state/$dir/fold=$epochId"
+        merged.getOrElse((s: Set[Int]) =>
+            withBucket(merge(read(spark, outDir, l, Some(s)))))(slice)
+          .coalesce(math.min(8L, 1L + refBytes / (256L << 20)).toInt)
+          .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(foldDir)
+        // a rolled bucket whose merged rows emptied keeps no pointer
+        // rather than dangling at a fold without rows
+        val written = childIds(spark, foldDir, "bucket=")
+        Layers(l.ptr ++ slice.map(b =>
+          b -> (if (written(b.toLong)) Seq(-epochId) else Seq.empty[Long])), l.nb)
+      }
+    }
+
+    def encode(l: Layers): Seq[CommitRow] =
+      l.ptr.toSeq.sortBy(_._1).flatMap { case (b, es) =>
+        es.map(e => CommitRow(kind, bucket = Some(b), epoch = Some(e),
+          n_buckets = Some(l.nb))) }
+
+    def decode(rows: Seq[CommitRow]): Layers = {
+      val rs = rows.filter(_.kind == kind)
+      Layers(rs.groupBy(_.bucket.get).view
+          .mapValues(_.map(_.epoch.get).sorted).toMap,
+        rs.headOption.flatMap(_.n_buckets).getOrElse(nBuckets))
+    }
+
+    /** Drop every layer dir below `epochId` that `l` no longer points at. */
+    def prune(spark: SparkSession, outDir: String, l: Layers,
+        epochId: Long): Unit = {
+      val refs = l.ptr.values.flatten.toSet
+      val root = s"$outDir/state/$dir"
+      childIds(spark, root, "epoch=").filter(e => e < epochId && !refs(e))
+        .foreach(e => deleteDir(spark, s"$root/epoch=$e"))
+      childIds(spark, root, "fold=").filter(f => f < epochId && !refs(-f))
+        .foreach(f => deleteDir(spark, s"$root/fold=$f"))
+    }
+  }
+
+  /** Per-fp distinct-doc counts `(fp, nd)`, bucketed by `pmod(fp, 64)`;
+    * counts sum across layers (a delta row is the count it adds).
     */
-  private[graft] val RollFamilies = Seq("fpcnt", "vbkt", "kbkt")
-  private def rollTurn(fam: String, epochId: Long,
-      ptr: Map[Int, Seq[Long]]): Boolean =
-    RollFamilies(((epochId % 3) + 3).toInt % 3) == fam ||
-      ptr.values.exists(_.size >= FpCompactAt)
+  private[graft] val FpLog = new BucketLog("fpcnt", "fp", 64, "fp",
+    identity, summed = true,
+    spark => spark.range(0).select(col("id").as("fp"), col("id").as("nd")))
+
+  /** Doc-scale verdict rows ([[StateCols]]), bucketed by a HASH of
+    * doc_id (not `pmod(doc_id, …)`, so sequential or skewed id schemes
+    * still spread evenly); the newest row per doc wins.
+    */
+  private[graft] val VLog = new BucketLog("vbkt", "v", 64, "doc_id",
+    (c: Column) => xxhash64(c), summed = false, emptyVerdictState)
+
+  /** The current bag-dedup keeper per distinct bag `(bag, keeper)`, so
+    * the displacement probe reads only the buckets of the batch's bags
+    * instead of scanning every verdict layer; the newest row per bag wins.
+    */
+  private[graft] val KLog = new BucketLog("kbkt", "k", 64, "bag",
+    (c: Column) => xxhash64(c), summed = false,
+    spark => spark.range(0).select(lit("").cast("string").as("bag"),
+      col("id").as("keeper")))
+
+  /** The bucketed logs, in rolling-fold turn order. */
+  private val BucketLogs = Seq(FpLog, VLog, KLog)
+
+  /** APPEND-ONLY BATCH LOG — the one shape of the batch-keyed state no
+    * later epoch supersedes (a row is written once, at its doc's first
+    * sight). An epoch writes at most one flat `<flat>/batch=<e>` dir; once
+    * [[FpCompactAt]] flats pile up below an epoch they fold into ONE
+    * immutable `<chunk>/chunk=<e>` dir, so reads list O(chunks +
+    * FpCompactAt flats) instead of O(epochs), and no row is written more
+    * than twice (chunks are never merged). The commit artifact records
+    * the folded-through watermark (`foldedKind`) and the live chunks
+    * (`chunkKind`); cleanup prunes folded flats and orphan chunks after
+    * the marker. With `fpBucketed`, chunks are partitioned by
+    * [[FpLog]]'s bucket of `fp` (and drop `batch`), so a probe reads
+    * them pruned to its fps' buckets; otherwise `batch` rides as a data
+    * column.
+    */
+  private[graft] final class BatchLog(flat: String, chunk: String,
+      foldedKind: String, chunkKind: String,
+      rowSchema: SparkSession => StructType, fpBucketed: Boolean) {
+
+    def flatDir(outDir: String, b: Long): String = s"$outDir/state/$flat/batch=$b"
+
+    private def chunkDir(outDir: String, c: Long): String =
+      s"$outDir/state/$chunk/chunk=$c"
+
+    private def rows(spark: SparkSession): StructType =
+      stateSchemas.getOrElseUpdate(s"$flat/rows", rowSchema(spark))
+
+    private def flatSchema(spark: SparkSession): StructType =
+      stateSchemas.getOrElseUpdate(flat, rows(spark).add("batch", LongType))
+
+    private def chunkSchema(spark: SparkSession): StructType =
+      if (!fpBucketed) flatSchema(spark)
+      else stateSchemas.getOrElseUpdate(chunk, rows(spark).add("bucket", IntegerType))
+
+    private def withFpBucket(df: DataFrame): DataFrame =
+      df.withColumn("bucket", FpLog.bucket(col("fp")))
+
+    /** Write epoch `e`'s rows — flat, or as an fp-bucketed chunk — and
+      * read them back by explicit schema.
+      */
+    def append(spark: SparkSession, outDir: String, e: Long, rs: DataFrame,
+        asChunk: Boolean): DataFrame =
+      if (asChunk) {
+        withFpBucket(rs).coalesce(8)
+          .write.mode(SaveMode.Overwrite).partitionBy("bucket")
+          .parquet(chunkDir(outDir, e))
+        spark.read.schema(chunkSchema(spark)).parquet(chunkDir(outDir, e))
+          .select(rows(spark).fieldNames.toSeq.map(col): _*)
+      } else {
+        rs.write.mode(SaveMode.Overwrite).parquet(flatDir(outDir, e))
+        spark.read.schema(rows(spark)).parquet(flatDir(outDir, e))
+      }
+
+    /** Fold the flats in (`b.folded`, `epochId`) into `chunk=<epochId>`
+      * once [[FpCompactAt]] of them pile up. Deterministic per epoch, so
+      * a crash replay rewrites the same chunk.
+      */
+    def fold(spark: SparkSession, outDir: String, epochId: Long,
+        b: Batches): Batches = {
+      val foldable = childIds(spark, s"$outDir/state/$flat", "batch=")
+        .filter(x => x > b.folded && x < epochId).toSeq.sorted
+      if (foldable.size < FpCompactAt) b
+      else {
+        val bytes = foldable.map(x => dirBytes(spark, flatDir(outDir, x))).sum
+        val parts = math.min(8L, 1L + bytes / (256L << 20)).toInt
+        val flats = spark.read.schema(flatSchema(spark))
+          .parquet(s"$outDir/state/$flat")
+          .filter(col("batch").isInCollection(foldable))
+        (if (fpBucketed)
+          withFpBucket(flats.select(rows(spark).fieldNames.toSeq.map(col): _*))
+            .coalesce(parts).write.partitionBy("bucket")
+        else flats.coalesce(parts).write)
+          .mode(SaveMode.Overwrite).parquet(chunkDir(outDir, epochId))
+        Batches(foldable.max, (b.chunks :+ epochId).distinct.sorted)
+      }
+    }
+
+    /** The live rows of `b` as `cols`: flats above the watermark up to
+      * batch `upTo` (a crash between a fold's commit and its cleanup
+      * leaves folded flats on disk; an out-of-order dir may hold newer
+      * ones) plus the live chunks (never an orphan), pruned to `buckets`
+      * on an fp-bucketed log.
+      */
+    def live(spark: SparkSession, outDir: String, b: Batches, upTo: Long,
+        cols: Seq[String], buckets: Option[Seq[Int]]): DataFrame = {
+      val root = s"$outDir/state/$flat"
+      val flats =
+        if (hasDataFiles(spark, root))
+          spark.read.schema(flatSchema(spark)).parquet(root)
+            .filter(col("batch") > b.folded && col("batch") <= upTo)
+        else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+          flatSchema(spark))
+      b.chunks.map { c =>
+        val rs = spark.read.schema(chunkSchema(spark)).parquet(chunkDir(outDir, c))
+        buckets.fold(rs)(bs => rs.filter(col("bucket").isInCollection(bs)))
+          .select(cols.map(col): _*)
+      }.foldLeft(flats.select(cols.map(col): _*))(_ unionByName _)
+    }
+
+    private def drop(spark: SparkSession, outDir: String, flatsThrough: Long,
+        deadChunk: Long => Boolean): Unit = {
+      childIds(spark, s"$outDir/state/$flat", "batch=").filter(_ <= flatsThrough)
+        .foreach(x => deleteDir(spark, flatDir(outDir, x)))
+      childIds(spark, s"$outDir/state/$chunk", "chunk=").filter(deadChunk)
+        .foreach(c => deleteDir(spark, chunkDir(outDir, c)))
+    }
+
+    /** Drop flats folded into a committed chunk, and orphan chunks below
+      * `epochId` (an empty live list prunes no chunk — only less).
+      */
+    def prune(spark: SparkSession, outDir: String, b: Batches,
+        epochId: Long): Unit =
+      drop(spark, outDir, b.folded,
+        c => b.chunks.nonEmpty && c < epochId && !b.chunks.contains(c))
+
+    /** Drop every flat and chunk below `epochId` — superseded by a
+      * consolidated rewrite at `epochId`.
+      */
+    def pruneBefore(spark: SparkSession, outDir: String, epochId: Long): Unit =
+      drop(spark, outDir, epochId - 1L, _ < epochId)
+
+    def encode(b: Batches): Seq[CommitRow] =
+      (if (b.folded >= 0L) Seq(CommitRow(foldedKind, epoch = Some(b.folded)))
+        else Nil) ++ b.chunks.sorted.map(c => CommitRow(chunkKind, epoch = Some(c)))
+
+    def decode(rs: Seq[CommitRow]): Batches =
+      Batches(rs.find(_.kind == foldedKind).flatMap(_.epoch).getOrElse(-1L),
+        rs.filter(_.kind == chunkKind).flatMap(_.epoch).sorted)
+  }
+
+  private def winSchema(spark: SparkSession): StructType =
+    Curation.winFpsOver(spark.range(0).select(col("id").as("doc_id"),
+      array(lit("")).as("toks")), 1).schema
+
+  /** The window-fp log `(doc_id, fp)` of every doc's sub-width windows:
+    * the crossing probe's source. Its founding batch — the log's
+    * token-scale bulk — is written as a chunk at birth.
+    */
+  private[graft] val WinvLog = new BatchLog("winv", "winvc", "wv", "wvc",
+    winSchema, fpBucketed = true)
+
+  /** Decontam-width window fps (gate-on): what makes [[regate]]
+    * possible without the dropped docs' text.
+    */
+  private[graft] val WincLog = new BatchLog("winc", "wincc", "wc", "wcc",
+    winSchema, fpBucketed = false)
+
+  /** Quarantined text of contaminated, otherwise-kept docs (gate-on):
+    * what [[regate]] resurrects from.
+    */
+  private[graft] val QuarLog = new BatchLog("quar", "quarc", "qf", "qfc",
+    spark => emptyVerdictState(spark)
+      .select(col("doc_id"), col("lang"), col("source"), col("n_tok"))
+      .withColumn("text", lit("").cast("string")).schema,
+    fpBucketed = false)
 
   /** ROLLING-compaction bucket selection: the k longest layer lists
-    * (k = half the buckets — each family folds every third epoch, see
-    * [[rollTurn]], so covering all buckets within the FpCompactAt - 2
-    * epoch budget takes two turns; only lists of ≥ 3 layers are worth
-    * folding), plus every bucket at the hard bound. Called on the
-    * pointer map AFTER this epoch's delta append; a pure function of it,
-    * so a crash replay folds the same set. With uniform touching the
-    * selection rotates through all buckets in ~6 epochs, keeping every
-    * bucket's fan-out ≤ FpCompactAt while amortized fold bandwidth stays
-    * the same ~state/(FpCompactAt - 2) per epoch the old
-    * all-buckets-at-once compaction cliff paid in one periodic 2× spike.
+    * (k = half the buckets — each log folds every third epoch, see
+    * [[BucketLog.rolled]], so covering all buckets within the
+    * FpCompactAt - 2 epoch budget takes two turns; only lists of ≥ 3
+    * layers are worth folding), plus every bucket at the hard bound.
+    * Called on the pointer map AFTER this epoch's delta append; a pure
+    * function of it, so a crash replay folds the same set. With uniform
+    * touching the selection rotates through all buckets in ~6 epochs,
+    * keeping every bucket's fan-out ≤ FpCompactAt while amortized fold
+    * bandwidth stays the same ~state/(FpCompactAt - 2) per epoch an
+    * all-buckets-at-once compaction would pay in one periodic 2× spike.
     * Skewed streams self-target: lists only grow for touched buckets, so
     * the longest-list rule folds exactly the hot ones.
     */
@@ -257,40 +584,6 @@ object Pipeline {
       .sortBy { case (b, es) => (-es.size, b) }
     (cands.take(k) ++ cands.filter(_._2.size >= FpCompactAt))
       .map(_._1).toSet
-  }
-
-  /** Write the rolling fold of `fam`: `merged(rolled)` (the family's
-    * merged view of the rolled buckets, INCLUDING this epoch's
-    * just-written delta, with its `bucket` column) lands bucket=-
-    * partitioned under `fold=<epochId>`, and the rolled buckets' pointer
-    * lists reset to the fold alone (encoded as the NEGATIVE id; see
-    * [[layerPath]]). Write parallelism is sized from the driver-listed
-    * byte size of the layers the rolled buckets reference (an
-    * overestimate — layers hold other buckets too — but the right order
-    * of magnitude, and free FS metadata).
-    */
-  private def rollFamily(spark: SparkSession, outDir: String, fam: String,
-      ptr: Map[Int, Seq[Long]], nBuckets: Int, epochId: Long,
-      merged: Set[Int] => DataFrame): Map[Int, Seq[Long]] = {
-    val rolled = rollSet(ptr, nBuckets)
-    if (rolled.isEmpty) ptr
-    else {
-      val refBytes = ptr.view.filterKeys(rolled).values.flatten.toSet
-        .iterator.map((id: Long) =>
-          dirBytes(spark, layerPath(outDir, fam, id))).sum
-      val parts = math.min(8L, 1L + refBytes / (256L << 20)).toInt
-      val foldDir = s"$outDir/state/$fam/fold=$epochId"
-      merged(rolled).coalesce(parts)
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .parquet(foldDir)
-      // only buckets the fold actually wrote re-point (a rolled bucket
-      // whose merged rows emptied — possible for keepers only in theory —
-      // keeps no pointer at all); the rest of the rolled set drops to
-      // empty lists rather than dangling at a fold without rows
-      val written = listPartitionInts(spark, foldDir, "bucket=")
-      ptr ++ rolled.map(b =>
-        b -> (if (written(b)) Seq(-epochId) else Seq.empty[Long]))
-    }
   }
 
   // numShards + benchmark (gate flag, fp signature) validated once per
@@ -322,17 +615,17 @@ object Pipeline {
 
   /** One row of the per-epoch commit artifact `state/commit/epoch=<e>` —
     * ALL of an epoch's driver-scale state in one parquet write, which is
-    * also the epoch's COMMIT MARKER (written last):
-    * `kind='fp'|'v'`: pointer rows of the fp-count / verdict DELTA LOGS
-    * (one row per (bucket, contributing epoch) — a bucket's current value
-    * is the MERGE of every pointed epoch's rows for it: counts sum for
-    * 'fp', newest row wins for 'v');
-    * `kind='roll'`: the cumulative per-(lang, source) report rollup;
-    * `kind='shard'`: per-shard kept-doc counts (manifest validation);
-    * `kind='res'`: the epoch's [[EpochResult]] row.
-    * Folding the report and shard counts forward here is what removes
-    * the last O(corpus) per-epoch aggregation: deltas come from the
-    * touched rows only, and the cumulative values ride this artifact.
+    * also the epoch's COMMIT MARKER (written last). Kinds: `fp`/`v`/`k`,
+    * a [[BucketLog]]'s pointer rows (one per (bucket, layer), with the
+    * bucket count); `wv`/`wvc`, `wc`/`wcc`, `qf`/`qfc`, a [[BatchLog]]'s
+    * folded-through watermark and live chunks; `fpu`, an fp bucket whose
+    * head fold is union-written (see [[EpochState]]); `roll`, the
+    * cumulative per-(lang, source) report rollup; `shard`, per-shard
+    * kept-doc counts (manifest validation); `res`, the epoch's
+    * [[EpochResult]]; `rg`, a regate's marker. Folding the report and
+    * shard counts forward here is what removes the last O(corpus)
+    * per-epoch aggregation: deltas come from the touched rows only, and
+    * the cumulative values ride this artifact.
     */
   private[graft] final case class CommitRow(kind: String,
       bucket: Option[Int] = None, epoch: Option[Long] = None,
@@ -352,42 +645,31 @@ object Pipeline {
   private[graft] final case class RollRow(lang: String, source: String,
       docsIn: Long, docsKept: Long, tokensKept: Long, docsContam: Long)
 
-  /** In-memory image of a committed epoch's commit artifact. The pointer
-    * maps are DELTA LOGS: `bucket -> every layer holding live rows for
-    * it` (layer id: positive e = the `epoch=e` dir — a tail delta, or the
-    * founding/re-bucket full copy; negative -e = the `fold=e` dir — a
-    * rolling-compaction full copy of a bucket subset written at epoch e).
-    * `kPtr` is the bag-keyed keeper side-state's map (nonempty once any
-    * doc was seen). `wvFolded`: window-log batches ≤ this id are folded
-    * into bucketed chunk dirs (-1 = none).
-    * `wvChunks`: the LIVE chunk dirs (never empty: the founding batch
-    * writes the first) — explicit liveness, so a chunk
-    * written by a crashed epoch whose batch later re-processed under a
-    * different id (replaced checkpoint) is an orphan cleanup deletes,
-    * never a silent duplicate in every crossing read.
+  /** In-memory image of a committed epoch's commit artifact: the extent
+    * of each bucketed log ([[FpLog]], [[VLog]], [[KLog]]) and each batch
+    * log ([[WinvLog]], [[WincLog]], [[QuarLog]]), the cumulative rollup
+    * and shard counts, and `fpUnion` — fpcnt buckets whose head fold
+    * holds UNMERGED rows (≤ 2 per fp: the previous head's row + one
+    * summed delta row), written by a UNION fold that skips the
+    * state-scale sum exchange; such a bucket's next fold MUST merge, so
+    * rows-per-fp stays ≤ 2 and roughly half of every fold's slice pays
+    * the exchange.
     */
-  private[graft] final case class EpochState(
-      fpPtr: Map[Int, Seq[Long]], fpNB: Int,
-      vPtr: Map[Int, Seq[Long]], vNB: Int,
-      rollup: Map[(String, String), RollRow],
-      shardKept: Map[Int, Long],
-      kPtr: Map[Int, Seq[Long]] = Map.empty, kNB: Int = KBuckets,
-      wvFolded: Long = -1L, wvChunks: Seq[Long] = Nil,
-      // gate-revision logs (gate-on dirs only), same fold/liveness shape
-      // as the window log: `wcFolded`/`qFolded` = winc / quar flat
-      // batches ≤ this id are folded into a chunk; `wcChunks`/`qChunks`
-      // = the LIVE `state/wincc|quarc/chunk=` dirs
-      wcFolded: Long = -1L, wcChunks: Seq[Long] = Nil,
-      qFolded: Long = -1L, qChunks: Seq[Long] = Nil,
-      // fpcnt buckets whose head fold holds UNMERGED rows (≤ 2 per fp:
-      // the previous head's row + one summed delta row) — written by a
-      // UNION fold, which skips the state-scale sum-merge exchange; such
-      // a bucket's next fold MUST merge, so rows-per-fp stays ≤ 2 and
-      // roughly half of every fold's slice pays the exchange
-      fpUnion: Set[Int] = Set.empty) {
+  private[graft] final case class EpochState(fp: Layers, v: Layers, k: Layers,
+      wv: Batches, wc: Batches, q: Batches,
+      rollup: Map[(String, String), RollRow], shardKept: Map[Int, Long],
+      fpUnion: Set[Int]) {
     def docsSeen: Long = rollup.values.map(_.docsIn).sum
     def docsKept: Long = rollup.values.map(_.docsKept).sum
+    def bucketed: Seq[(BucketLog, Layers)] = Seq(FpLog -> fp, VLog -> v, KLog -> k)
+    def batched: Seq[(BatchLog, Batches)] =
+      Seq(WinvLog -> wv, WincLog -> wc, QuarLog -> q)
   }
+
+  /** The state before the founding epoch. */
+  private def emptyState: EpochState = EpochState(FpLog.none, VLog.none,
+    KLog.none, Batches(-1L, Nil), Batches(-1L, Nil), Batches(-1L, Nil),
+    Map.empty, Map.empty, Set.empty)
 
   // steady-state epochs skip the commit-artifact read: the previous
   // epoch's state is cached per (JVM, outDir), keyed by the epoch id it
@@ -433,8 +715,8 @@ object Pipeline {
     *    window-fp log — shuffle O(touched), not O(corpus);
     *  - keeper displacement comes from a broadcast join of the batch's
     *    per-bag minima against the bag-keyed keeper side-state
-    *    (`state/kbkt`, `bag -> keeper`, bucketed by `pmod(xxhash64(bag),
-    *    KBuckets)`) — read pruned to the batch's bag buckets, maintained
+    *    (`state/kbkt`, `bag -> keeper`, bucketed by a hash of the bag)
+    *    — read pruned to the batch's bag buckets, maintained
     *    by a ≤ batch-bag-scale delta per epoch, so no epoch scans the
     *    verdict layers for keepers;
     *  - the new verdict rows are ONLY the touched buckets' rows re-emitted
@@ -468,35 +750,29 @@ object Pipeline {
     * Scale shape: per epoch the shuffled rows are O(batch + touched keys)
     * (PipelineIncrSpec pins this with a task-metrics listener) and the
     * state WRITE volume is O(batch + flipped docs), not O(corpus) —
-    * even when the batch's keys saturate every hash bucket. Both
-    * token-scale (`state/fpcnt`) and doc-scale (`state/vbkt`) state are
-    * DELTA LOGS over hash buckets: an epoch APPENDS only its own rows
-    * (the batch's fp tallies; the fresh + flipped verdict rows) as a new
-    * epoch layer, the commit artifact's pointer rows record which epochs
-    * hold live rows per bucket, and readers MERGE the pointed layers
-    * (counts sum for fps; the newest row wins per doc, resolved by
-    * broadcast anti-joins of the batch-scale newer layers against the
-    * one full base copy — shuffle-free). A ROLLING compaction
-    * ([[rollSet]]) folds a rotating bucket slice each epoch into a
-    * `fold=` layer, keeping every bucket's fan-out ≤ [[FpCompactAt]] —
-    * the same amortized O(state / interval) bandwidth an all-at-once
-    * compaction would pay, but smooth: no periodic 2× epoch (a full
-    * compaction remains only for a changed bucket constant). This is the LSM
-    * shape: without it, a
-    * micro-batch whose fps touch every bucket (any realistic batch does
-    * — B distinct fps saturate K << B buckets) would force an O(state)
-    * rewrite per epoch no matter how fine the bucketing. EVERY state
-    * read is bucket-pruned (seen-ids, flip rows, the keeper probe, the
-    * per-fp prior-count probe) — O(touched-bucket bytes) columnar, the
-    * parquet-state analogue of the point lookups a KV state store (the
-    * streaming twin's RocksDB) would serve. The
-    * window-fp log (`state/winv`, append-only, batch-keyed) is read only
-    * under a broadcast of crossing fps, and not at all in the
-    * no-crossing steady state. Driver-side collects stay ≤ max(numShards,
-    * FpBuckets, VBuckets, |lang×source| — the report's own reviewable
-    * cardinality) rows. Re-delivered docs (same doc_id in several
-    * batches, same text — the at-least-once contract) collapse via the
-    * seen-id probe.
+    * even when the batch's keys saturate every hash bucket. The state
+    * has two shapes. The keyed state — per-fp counts (`state/fpcnt`),
+    * verdict rows (`state/vbkt`), bag keepers (`state/kbkt`) — is a
+    * [[BucketLog]]: an epoch appends only its own rows as a layer, the
+    * commit artifact's pointer rows record which layers hold live rows
+    * per bucket, and readers merge the pointed layers after a
+    * bucket-pruned, semi-joined read (O(touched-bucket bytes) columnar —
+    * the parquet-state analogue of the point lookups the streaming twin's
+    * RocksDB serves). A ROLLING fold ([[rollSet]]) keeps every bucket's
+    * fan-out ≤ [[FpCompactAt]] at the amortized bandwidth an all-at-once
+    * compaction would pay, but smoothly: no periodic 2× epoch. This is
+    * the LSM shape: without it, a micro-batch whose keys touch every
+    * bucket (B distinct fps saturate K << B buckets) would force an
+    * O(state) rewrite per epoch however fine the bucketing. The
+    * batch-keyed state no epoch supersedes — window fps (`state/winv`),
+    * decontam fps (`state/winc`), quarantined text (`state/quar`) — is a
+    * [[BatchLog]]: one flat dir per epoch, folded into immutable chunks.
+    * The window log is read only under a broadcast of crossing fps, and
+    * not at all in the no-crossing steady state. Driver-side collects
+    * stay ≤ max(numShards, bucket count, |lang×source| — the report's
+    * own reviewable cardinality) rows. Re-delivered docs (same doc_id in
+    * several batches, same text — the at-least-once contract) collapse
+    * via the seen-id probe.
     *
     * With `benchmark` set, fresh docs additionally carry the q104
     * contamination flag (window-fp intersection with the benchmark,
@@ -679,8 +955,7 @@ object Pipeline {
     // its original benchmark) repairs everything in one call; its
     // commit-time cleanup then releases this guard. Cost here: one FS
     // listing of a dir that exists only while a regate is unfinished.
-    val inflightRegates = listPartitionLongs(spark, s"$outDir/state/staging",
-        "regate=")
+    val inflightRegates = childIds(spark, s"$outDir/state/staging", "regate=")
       .filter(r => isCommitted(spark, s"$outDir/state/staging/regate=$r/bsig"))
       .filterNot(committed.contains)
     require(inflightRegates.isEmpty,
@@ -693,29 +968,7 @@ object Pipeline {
     // the delta base's committed state; None only for the founding epoch
     val prevState: Option[EpochState] =
       lastCommitted.map(e => loadEpochState(spark, outDir, e, useCache = true))
-
-    // layered (rank-tagged) view for the per-epoch probes: precedence is
-    // resolved AFTER each probe shrinks the candidate set (bag join, flip
-    // semi-join), so a steady-state epoch never materializes a full
-    // merged view. Bucket pruning is only sound when the state was
-    // written under the CURRENT VBuckets constant — probe bucket sets are
-    // computed with the current hash, so pruning old-constant partitions
-    // with them would silently drop state rows (missed re-deliveries ⇒
-    // duplicate corpus rows) one epoch BEFORE the compacting re-bucket
-    // runs; a mismatch epoch compacts anyway, so the unpruned read costs
-    // nothing extra.
-    val vPtrBase: Map[Int, Seq[Long]] =
-      prevState.map(_.vPtr).getOrElse(Map.empty)
-    val vNBBase: Int = prevState.map(_.vNB).getOrElse(VBuckets)
-    def vLayersFor(buckets: Seq[Int]): DataFrame = {
-      val prunable = if (vNBBase == VBuckets) Some(buckets.toSet) else None
-      vLayersRanked(spark, outDir, vPtrBase, prunable)
-    }
-
-    val emptyFp = spark.range(0).select(col("id").as("fp"), col("id").as("nd"))
-    val fpPtrBase: Map[Int, Seq[Long]] =
-      prevState.map(_.fpPtr).getOrElse(Map.empty)
-    val fpNBBase: Int = prevState.map(_.fpNB).getOrElse(FpBuckets)
+    val prev = prevState.getOrElse(emptyState)
 
     // re-delivery: batch ids already in the state contribute nothing new
     // (same doc_id ⇒ same text under the at-least-once contract). The
@@ -723,9 +976,10 @@ object Pipeline {
     // state (only the buckets the batch's ids can live in are read);
     // `seenIds` is ≤ batch-sized.
     val batchIds = base.select(col("doc_id"))
-    val batchBuckets: Seq[Int] = base.select(vBucket(col("doc_id")).as("b"))
+    val batchBuckets: Seq[Int] = base.select(VLog.bucket(col("doc_id")).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val seenIds = vLayersFor(batchBuckets).select(col("doc_id"))
+    val seenIds = VLog.read(spark, outDir, prev.v, Some(batchBuckets))
+      .select(col("doc_id"))
       .join(broadcast(batchIds), Seq("doc_id")).distinct().localCheckpoint()
     val batchSigs = Curation.docSignals(base)
     val newSigs = batchSigs.join(broadcast(seenIds), Seq("doc_id"), "left_anti")
@@ -758,55 +1012,32 @@ object Pipeline {
       return result
     }
 
-    // the epoch's window-fp log, appended batch-keyed, holding the NEW
-    // docs' windows only (filtered BEFORE the write: a re-delivered doc's
-    // windows are already in its first batch's dir, so appending them
-    // again would grow the one unbounded token-scale state by pure
-    // duplicates on every re-delivery — and the seen filter is
-    // deterministic on a same-epoch replay, so overwrite rewrites the
-    // same bytes). Probed only under a broadcast of crossing fps.
-    //
-    // Layout by batch role, mirroring the other families: the FOUNDING
-    // batch — the log's token-scale bulk — is written fp-bucketed at
-    // birth (`state/winvc/chunk=<e>/bucket=pmod(fp, FpBuckets)`), so a
-    // later crossing epoch's probe partition-prunes it to the crossed
-    // buckets; tail batches stay FLAT under `state/winv/batch=<e>`
-    // (batch-scale — reading them whole is cheap, and partitionBy on a
-    // batch-scale write is the measured 2 s/epoch file fan-out) until
-    // the chunk fold below re-buckets them in bulk.
-    // "founding" = the first batch to see any doc: an empty batch 0 (a
-    // stream that triggered before data arrived) must not rob the real
-    // founding mass of its bucketed-at-birth write
-    val winvIsChunk = prevState.forall(_.docsSeen == 0L)
-    val newWins =
-      if (winvIsChunk) {
-        Curation.winFpsOver(newBase.select(col("doc_id"), col("toks")),
-            Curation.SubWidth)
-          .withColumn("bucket", fpBucket(col("fp")))
-          .coalesce(8)
-          .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-          .parquet(s"$outDir/state/winvc/chunk=$epochId")
-        spark.read.schema(winvcSchema(spark))
-          .parquet(s"$outDir/state/winvc/chunk=$epochId")
-          .select(col("doc_id"), col("fp"))
-      } else {
-        Curation.winFpsOver(newBase.select(col("doc_id"), col("toks")),
-            Curation.SubWidth)
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$outDir/state/winv/batch=$epochId")
-        spark.read.schema(winvSchema(spark, withBatch = false))
-          .parquet(s"$outDir/state/winv/batch=$epochId")
-      }
+    // the epoch's window-fp rows, for the NEW docs only (filtered BEFORE
+    // the write: a re-delivered doc's windows are already in the batch
+    // that first landed it, so appending them again would grow the one
+    // unbounded token-scale state by pure duplicates; the seen filter is
+    // deterministic, so a same-epoch replay rewrites the same bytes).
+    // The FOUNDING batch — the log's token-scale bulk — is written as an
+    // fp-bucketed chunk at birth, so a later crossing probe
+    // partition-prunes it; tail batches stay flat (batch-scale: reading
+    // them whole is cheap, and partitionBy on a batch-scale write is the
+    // measured 2 s/epoch file fan-out) until the log's fold re-buckets
+    // them in bulk. "Founding" = the first batch to see any doc: an empty
+    // batch 0 (a stream that triggered before data arrived) must not rob
+    // the real founding mass of its bucketed-at-birth write.
+    val winvIsChunk = prev.docsSeen == 0L
+    val newWins = WinvLog.append(spark, outDir, epochId,
+      Curation.winFpsOver(newBase.select(col("doc_id"), col("toks")),
+        Curation.SubWidth), asChunk = winvIsChunk)
 
-    // per-fp distinct-doc counts: merge the batch's tallies into the
-    // BUCKETED fp state. The state is hash-partitioned on pmod(fp,
-    // FpBuckets) and an epoch only reads + rewrites the buckets its batch
-    // touches (pointer-pruned; untouched buckets keep their bytes and
-    // their pointer) — per-epoch fp I/O is O(touched buckets), not
-    // O(all fps). `updated` (batch fps that already existed) and `fresh`
-    // (fps first seen this batch) are both ≤ batch-sized.
+    // per-fp distinct-doc counts: merge the batch's tallies into
+    // [[FpLog]], reading only the buckets the batch touches (untouched
+    // buckets keep their bytes and their pointer) — per-epoch fp I/O is
+    // O(touched buckets), not O(all fps). `updated` (batch fps that
+    // already existed) and `fresh` (fps first seen this batch) are both
+    // ≤ batch-sized.
     val contrib = newWins.groupBy(col("fp")).agg(count(lit(1)).as("add"))
-      .withColumn("bucket", fpBucket(col("fp")))
+      .withColumn("bucket", FpLog.bucket(col("fp")))
       .localCheckpoint()
     // one local pass over the checkpointed tallies yields both the
     // touched-bucket list and the fp count that gates the broadcasts
@@ -819,151 +1050,59 @@ object Pipeline {
     val bcastFp: DataFrame => DataFrame =
       if (nContribFps <= FpBroadcastMaxRows) df => broadcast(df)
       else df => df
-    // delta-layer write parallelism: one write task (one file per touched
-    // bucket dir) is right for a tail batch, but a founding/backfill
-    // epoch's delta IS the state — a coalesce(1) there would funnel the
-    // whole founding write (and the final stage feeding it) through a
-    // single task. Sized from the driver-known fp tally, capped at the
-    // compaction write parallelism so file fan-out stays bounded.
-    val layerParts: Int =
-      math.min(8L, 1L + nContribFps / 4000000L).toInt
-    // a FULL compaction (every layer folded into one fresh copy) runs
-    // only on a changed FpBuckets constant. Steady-state fan-out is
-    // bounded by the ROLLING fold below instead (a per-epoch bucket
-    // slice — no all-at-once compaction cliff); between folds an epoch
-    // WRITES only its own tallies (O(batch)) and the merged view is
-    // (re)constructed on read by summing the pointed layers.
-    val mustCompactFp = fpPtrBase.nonEmpty && fpNBBase != FpBuckets
-    def fpLayers(buckets: Option[Seq[Int]]): DataFrame = {
-      // bucket pruning only when the state was written under the CURRENT
-      // FpBuckets constant — `touched` is computed with the current hash,
-      // so pruning old-constant partitions with it would drop live counts
-      // (missed priors ⇒ doubled fps in the compaction fold, missed
-      // crossings) one epoch before the re-bucket; the mismatch epoch
-      // compacts anyway, so the unpruned read is the same O(state) cost.
-      // (The per-layer POINTED filter inside pointedLayers is sound
-      // either way: the pointer map's bucket keys were computed under the
-      // layer's own constant, consistent with the layer's data.)
-      // Sum-merge: a bucket's count is the sum of its rows across layers
-      // (the oldest layer is the last full copy, newer ones per-epoch
-      // tallies).
-      val prunable = if (fpNBBase == FpBuckets) buckets else None
-      pointedLayers(spark, outDir, "fpcnt", fpcntSchema(spark), fpPtrBase,
-        prunable.map(_.toSet))
-        .map(_.select(col("fp"), col("nd")))
-        .reduceOption(_ unionByName _).getOrElse(emptyFp)
-    }
-    def sumFp(layers: DataFrame): DataFrame =
-      layers.groupBy(col("fp")).agg(sum(col("nd")).as("nd"))
     // prior merged counts of exactly the BATCH's fps: filter the layered
     // scan to the batch's fp set (broadcast semi) BEFORE the sum-merge,
     // so the aggregation's exchange moves O(batch × layers) rows — a
     // groupBy over the raw layers would re-shuffle every fp in the
     // touched buckets each epoch, breaking the pinned shuffle budget
-    val fPrevFold: DataFrame = sumFp(fpLayers(Some(touched))
-      .join(bcastFp(contrib.select(col("fp"))), Seq("fp"), "left_semi"))
+    val fPrevFold: DataFrame = FpLog.merge(
+      FpLog.read(spark, outDir, prev.fp, Some(touched))
+        .join(bcastFp(contrib.select(col("fp"))), Seq("fp"), "left_semi"))
     val updated = fPrevFold.join(bcastFp(contrib.select(col("fp"), col("add"))),
       Seq("fp")).localCheckpoint()
     val fresh = contrib.join(bcastFp(updated.select(col("fp"))),
       Seq("fp"), "left_anti").select(col("fp"), col("add").as("nd"))
-    val fpPtrApp: Map[Int, Seq[Long]] =
-      if (touched.isEmpty && !mustCompactFp) fpPtrBase
-      else {
-        // the epoch's fp layer: on the normal path just the batch's own
-        // tallies (value column named nd so layers sum uniformly; a
-        // layer row IS the delta it contributes) — O(batch) write; a
-        // compaction instead writes the full merged counts with write
-        // parallelism 8. Coalesce (not repartition) keeps both
-        // shuffle-free — a state-keyed exchange here would violate the
-        // O(batch + touched) shuffle budget the spec pins.
-        //
-        // Layout by layer role: FULL-copy layers (founding + compaction
-        // — the state-scale layers reads must prune) are bucket=
-        // PARTITIONED dirs; a tail DELTA layer is written FLAT (bucket
-        // as a data column, layerParts files total). partitionBy on a
-        // batch-scale delta would fan each write task into up to
-        // FpBuckets tiny files — ≈1 s of per-file commit overhead every
-        // epoch for a layer whose reads are batch-scale row filters
-        // anyway (the pointer map already confines which epochs a
-        // bucket's read opens).
-        val fpDir = s"$outDir/state/fpcnt/epoch=$epochId"
-        // ONE copy of the delta frame: both layouts below write exactly
-        // this (the flat path verbatim, the founding path partitioned),
-        // so the written layer and its pointer bookkeeping cannot drift
-        val delta = contrib.select(col("fp"), col("add").as("nd"), col("bucket"))
-          .coalesce(layerParts)
-        if (mustCompactFp || fpPtrBase.isEmpty) {
-          val layer =
-            if (mustCompactFp)
-              // the one O(state) fold, amortized over the compaction
-              // interval: full merged counts + the batch's tallies
-              sumFp(fpLayers(None))
-                .join(bcastFp(contrib.select(col("fp"), col("add"))), Seq("fp"), "left")
-                .select(col("fp"), (col("nd") + coalesce(col("add"), lit(0L))).as("nd"))
-                .unionByName(fresh)
-                .withColumn("bucket", fpBucket(col("fp")))
-                .coalesce(8)
-            else delta
-          layer.write.mode(SaveMode.Overwrite).partitionBy("bucket")
-            .parquet(fpDir)
-          // pointer rows forward from the FREE directory listing: a
-          // compaction points every written bucket at this epoch alone
-          val written = listPartitionInts(spark, fpDir, "bucket=")
-          if (mustCompactFp) written.map(_ -> Seq(epochId)).toMap
-          else appendPtr(fpPtrBase, written, epochId)
-        } else {
-          delta.write.mode(SaveMode.Overwrite).parquet(fpDir)
-          // `touched` IS the flat layer's exact bucket set (the layer is
-          // contrib verbatim), so the pointer append needs no listing
-          appendPtr(fpPtrBase, touched, epochId)
-        }
-      }
-    // rolling compaction (no-op right after a full compaction or at
-    // founding — every list is length 1 then). The fp merge is the one
-    // fold that pays a state-scale exchange (counts must co-locate per
-    // fp to sum), and the fp state is TOKEN-scale — the largest periodic
-    // cost an epoch sees. So each fold's slice splits in two: a MERGE
-    // half pays the sum exchange and lands 1 row/fp; a UNION half skips
-    // it entirely — the bucket's head rows pass through untouched (no
-    // exchange) plus ONE summed row over its tail deltas (a delta-scale
-    // exchange). Union-written buckets are recorded in the commit
-    // (`fpUnion`) and MUST merge on their next fold, so rows-per-fp in
-    // any head layer stays ≤ 2 (readers sum rows per fp anyway) while
-    // the per-fold exchange roughly halves — the fpcnt-turn residue
-    // spike smoothing. Hard-bound (out-of-turn) folds always merge.
-    // All of it is a pure function of (committed fpUnion, fpPtrApp,
-    // epochId), so a crash replay folds the same split.
+    // the epoch's fp layer is the batch's tallies as they are. Write
+    // parallelism: one task is right for a tail batch, but a founding or
+    // backfill delta IS the state, so it is sized from the fp tally,
+    // capped at the fold write parallelism so file fan-out stays bounded
+    val fpApp = FpLog.append(spark, outDir, epochId, prev.fp,
+      contrib.select(col("fp"), col("add").as("nd"), col("bucket"))
+        .coalesce(math.min(8L, 1L + nContribFps / 4000000L).toInt), touched)
+    // rolling fold. The fp merge is the one fold that pays a state-scale
+    // exchange (counts must co-locate per fp to sum), and the fp state is
+    // TOKEN-scale — the largest periodic cost an epoch sees. So each
+    // fold's slice splits in two: a MERGE half pays the sum exchange and
+    // lands 1 row/fp; a UNION half skips it — the bucket's head rows pass
+    // through untouched plus ONE summed row over its tail deltas (a
+    // delta-scale exchange). Union-written buckets are recorded in the
+    // commit (`fpUnion`) and MUST merge on their next fold, so rows-per-fp
+    // in any head layer stays ≤ 2 (readers sum rows per fp anyway) while
+    // the per-fold exchange roughly halves. Hard-bound (out-of-turn) folds
+    // always merge. All of it is a pure function of (committed fpUnion,
+    // fpApp, epochId), so a crash replay folds the same split; a
+    // re-bucket's full copy starts the union set over.
     val fpUnionBase: Set[Int] =
-      if (mustCompactFp || fpPtrBase.isEmpty) Set.empty
-      else prevState.map(_.fpUnion).getOrElse(Set.empty)
-    val (fpPtrNew: Map[Int, Seq[Long]], fpUnionNew: Set[Int]) =
-      if (!rollTurn("fpcnt", epochId, fpPtrApp)) (fpPtrApp, fpUnionBase)
-      else {
-        val rolledFp = rollSet(fpPtrApp, FpBuckets)
-        def mustMerge(b: Int): Boolean = fpUnionBase(b) ||
-          fpPtrApp.get(b).exists(_.size >= FpCompactAt)
-        val unionFp: Set[Int] = rolledFp
-          .filter(b => !mustMerge(b) && (((b + epochId) % 2) + 2) % 2 == 1)
-        val mergeFp: Set[Int] = rolledFp -- unionFp
-        def layersOf(ptr: Map[Int, Seq[Long]], only: Option[Set[Int]]) =
-          pointedLayers(spark, outDir, "fpcnt", fpcntSchema(spark), ptr, only)
-            .map(_.select(col("fp"), col("nd")))
-            .reduceOption(_ unionByName _).getOrElse(emptyFp)
-        val ptr2 = rollFamily(spark, outDir, "fpcnt", fpPtrApp, FpBuckets,
-          epochId, _ => {
-            val mergePart = sumFp(layersOf(fpPtrApp, Some(mergeFp)))
-            // head rows pass through (≤ 1 row/fp — a union bucket's head
-            // is never itself union-written, by the mustMerge rule);
-            // tail deltas sum into one row per fp
-            val unionBase = layersOf(fpPtrApp.view.filterKeys(unionFp)
-              .mapValues(_.take(1)).toMap, None)
-            val unionDelta = sumFp(layersOf(fpPtrApp.view.filterKeys(unionFp)
-              .mapValues(_.drop(1)).toMap, None))
-            mergePart.unionByName(unionBase).unionByName(unionDelta)
-              .withColumn("bucket", fpBucket(col("fp")))
-          })
-        (ptr2, (fpUnionBase ++ unionFp) -- mergeFp)
-      }
+      if (prev.fp.nb != FpLog.nBuckets) Set.empty else prev.fpUnion
+    val fpRolled = FpLog.rolled(epochId, fpApp)
+    val unionFp: Set[Int] = fpRolled.filter(b =>
+      !fpUnionBase(b) && !fpApp.ptr.get(b).exists(_.size >= FpCompactAt) &&
+        (((b + epochId) % 2) + 2) % 2 == 1)
+    val mergeFp: Set[Int] = fpRolled -- unionFp
+    def fpRows(ptr: Map[Int, Seq[Long]]): DataFrame =
+      FpLog.read(spark, outDir, Layers(ptr, FpLog.nBuckets), None)
+    val fpNew = FpLog.roll(spark, outDir, epochId, fpApp, Some(_ => {
+      val heads = fpApp.ptr.view.filterKeys(unionFp)
+      FpLog.merge(FpLog.read(spark, outDir, fpApp, Some(mergeFp)))
+        // head rows pass through (≤ 1 row/fp — a union bucket's head is
+        // never itself union-written, by the must-merge rule); tail
+        // deltas sum into one row per fp
+        .unionByName(fpRows(heads.mapValues(_.take(1)).toMap)
+          .select(col("fp"), col("nd")))
+        .unionByName(FpLog.merge(fpRows(heads.mapValues(_.drop(1)).toMap)))
+        .withColumn("bucket", FpLog.bucket(col("fp")))
+    }))
+    val fpUnionNew = (fpUnionBase ++ unionFp) -- mergeFp
 
     // fps that CROSSED the duplicate threshold this epoch (an existing
     // doc's window flips non-dup → dup exactly when its fp crosses; a
@@ -977,36 +1116,22 @@ object Pipeline {
     // state — an epoch that crosses NOTHING — must not scan it at all:
     // `crossed` is a local filter over the checkpointed batch-sized merge,
     // so the emptiness probe costs no job.
-    val prevWvFolded: Long = prevState.map(_.wvFolded).getOrElse(-1L)
-    val prevWvChunks: Seq[Long] = prevState.map(_.wvChunks).getOrElse(Nil)
     val dDup =
       if (crossed.isEmpty)
         spark.range(0).select(col("id").as("doc_id"), col("id").as("d_dup"))
       else {
-        // the log's CHUNKED mass (the founding batch + every fold) is
-        // read pruned to the crossed fps' buckets — O(crossed-bucket
-        // bytes), not O(log); only the flat tails (≤ FpCompactAt recent
+        // the log's chunks (the founding batch + every fold) are read
+        // pruned to the crossed fps' buckets — O(crossed-bucket bytes),
+        // not O(log); only the flat tails (≤ FpCompactAt recent
         // batch-scale dirs) are read whole. Live chunks are the COMMITTED
-        // ones ≤ the delta base (this epoch's own crash-replayed fold, if
-        // any, would double-count the flats it covers — those are only
-        // deleted after the commit marker); live flats are the batches in
-        // (wvFolded, epochId] — the upper bound is defense in depth
-        // against a manually restored out-of-order dir, the lower bound
-        // skips folded flats cleanup has not yet pruned.
+        // ones of the delta base: this epoch's own crash-replayed fold,
+        // if any, would double-count the flats it covers (those are only
+        // deleted after the commit marker)
         val crossedBuckets: Seq[Int] = crossed
-          .select(fpBucket(col("fp")).as("b")).distinct()
+          .select(FpLog.bucket(col("fp")).as("b")).distinct()
           .collect().map(_.getInt(0)).toSeq.sorted
-        val flats = spark.read.schema(winvSchema(spark, withBatch = true))
-          .parquet(s"$outDir/state/winv")
-          .filter(col("batch") <= epochId && col("batch") > prevWvFolded)
-          .select(col("doc_id"), col("fp"))
-        val chunks = prevWvChunks
-          .map(c => spark.read.schema(winvcSchema(spark))
-            .parquet(s"$outDir/state/winvc/chunk=$c")
-            .filter(col("bucket").isInCollection(crossedBuckets))
-            .select(col("doc_id"), col("fp")))
-          .reduceOption(_ unionByName _)
-        chunks.map(_.unionByName(flats)).getOrElse(flats)
+        WinvLog.live(spark, outDir, prev.wv, epochId, Seq("doc_id", "fp"),
+            Some(crossedBuckets))
           .join(bcastFp(crossed), Seq("fp"))
           .distinct()
           .join(broadcast(newIds), Seq("doc_id"), "left_anti")
@@ -1014,30 +1139,20 @@ object Pipeline {
           .localCheckpoint()
       }
 
-    // keeper displacement: batch minima vs the CURRENT keepers, read
-    // from the bag-keyed side-state (`state/kbkt`, rows (bag, keeper),
-    // bucketed by pmod(xxhash64(bag), KBuckets)) pruned to the batch's
-    // bag buckets — a steady epoch reads O(batch-bag buckets), never a
-    // full verdict scan. Newest row wins per bag, resolved AFTER the
-    // broadcast bag join shrinks the candidates.
-    val kPtrBase: Map[Int, Seq[Long]] =
-      prevState.map(_.kPtr).getOrElse(Map.empty)
-    val kNBBase: Int = prevState.map(_.kNB).getOrElse(KBuckets)
-    def keeperLayers(buckets: Seq[Int]): DataFrame = {
-      // pruning gated on the stored bucket constant, like the other
-      // families (probe buckets use the current hash)
-      val prunable = if (kNBBase == KBuckets) Some(buckets.toSet) else None
-      kLayersRanked(spark, outDir, kPtrBase, prunable)
-    }
+    // keeper displacement: batch minima vs the CURRENT keepers, read from
+    // [[KLog]] pruned to the batch's bag buckets — a steady epoch reads
+    // O(batch-bag buckets), never a full verdict scan. Newest row wins
+    // per bag, resolved AFTER the broadcast bag join shrinks the
+    // candidates.
     // NOT checkpointed: a deterministic single aggregation over the
     // checkpointed newSigs — each consumer (the bucket collect below,
     // the bagMatch broadcast build, freshRows, the kbkt delta) re-runs
     // the cheap batch-scale hash agg inside its own existing job instead
     // of paying a dedicated materialization job per epoch
     val batchMin = newSigs.groupBy(col("bag")).agg(min(col("doc_id")).as("b_min"))
-    val bagBuckets: Seq[Int] = batchMin.select(kBucket(col("bag")).as("b"))
+    val bagBuckets: Seq[Int] = batchMin.select(KLog.bucket(col("bag")).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val bagMatch = keeperLayers(bagBuckets)
+    val bagMatch = KLog.read(spark, outDir, prev.k, Some(bagBuckets))
       .join(broadcast(batchMin), Seq("bag"))
       .groupBy(col("bag"), col("b_min"))
       .agg(max_by(col("keeper"), col("_layer")).as("k_id"))
@@ -1048,21 +1163,16 @@ object Pipeline {
 
     // contamination flags for fresh docs (gate-on only): q104's window
     // formula vs the benchmark, evaluated once at first sight. The
-    // decontam-width fps are PERSISTED (`state/winc/batch=<e>`, flat,
-    // batch-keyed — same shape as the winv log) before the probe
+    // decontam-width fps are PERSISTED to [[WincLog]] before the probe
     // consumes them: they are what makes a later [[regate]] possible
-    // (contamination vs a REVISED benchmark is recomputable from this
-    // log for every doc ever seen, without the dropped docs' text).
-    // One extra batch-scale write per gate-on epoch — the declared price
-    // of benchmark revisability.
+    // (contamination vs a REVISED benchmark is recomputable from this log
+    // for every doc ever seen, without the dropped docs' text). One extra
+    // batch-scale write per gate-on epoch — the declared price of
+    // benchmark revisability.
     val contamIds: Option[DataFrame] = benchFps.map { bf =>
-      val wincDir = s"$outDir/state/winc/batch=$epochId"
-      Curation.winFpsOver(newBase.select(col("doc_id"), col("toks")),
-          Curation.DecontamWidth)
-        .write.mode(SaveMode.Overwrite).parquet(wincDir)
-      Curation.contaminatedOf(
-        spark.read.schema(winvSchema(spark, withBatch = false))
-          .parquet(wincDir), bf)
+      Curation.contaminatedOf(WincLog.append(spark, outDir, epochId,
+          Curation.winFpsOver(newBase.select(col("doc_id"), col("toks")),
+            Curation.DecontamWidth), asChunk = false), bf)
         .withColumn("_cont", lit(true))
     }
 
@@ -1072,12 +1182,8 @@ object Pipeline {
     val flipIds = displaced.select(col("doc_id"))
       .unionByName(dDup.select(col("doc_id"))).distinct().localCheckpoint()
     val flipBuckets: Seq[Int] = flipIds
-      .select(vBucket(col("doc_id")).as("b")).distinct()
+      .select(VLog.bucket(col("doc_id")).as("b")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-
-    // verdict-state compaction mirrors the fp-state rule; steady-state
-    // fan-out is the rolling fold's job
-    val mustCompactV = vPtrBase.nonEmpty && vNBBase != VBuckets
 
     // assemble the epoch's CHANGED verdict rows only: the flipped docs'
     // old rows re-emitted with the flips applied (bucket-pruned merged
@@ -1088,7 +1194,7 @@ object Pipeline {
       // candidates = every layer's rows for the flip docs (bucket-pruned
       // read + broadcast semi-join), then newest row wins per doc — the
       // precedence aggregation shuffles only flip-scale rows
-      mergeRankedVerdicts(vLayersFor(flipBuckets)
+      VLog.merge(VLog.read(spark, outDir, prev.v, Some(flipBuckets))
         .join(broadcast(flipIds), Seq("doc_id")))
     val exist = flipOld
       .withColumnRenamed("kept", "kept_prev")
@@ -1158,7 +1264,7 @@ object Pipeline {
       sum(when(isNewKept, col("n_tok")).otherwise(0L)).as("d_tok_add"),
       sum(when(isRemovedNow, col("n_tok")).otherwise(0L)).as("d_tok_rem"),
       sum(when(col("is_new") && col("contam"), 1L).otherwise(0L)).as("d_cont"),
-      collect_set(vBucket(col("doc_id"))).as("bks"),
+      collect_set(VLog.bucket(col("doc_id"))).as("bks"),
       count(lit(1)).as("d_rows"),
       // keeper-delta bookkeeping rides the same pass: a fresh row with
       // bag_keep is EXACTLY a bag whose keeper changed this epoch (fresh
@@ -1167,145 +1273,50 @@ object Pipeline {
       // replaces its read-back job
       sum(when(col("is_new") && col("bag_keep"), 1L).otherwise(0L)).as("d_keep"),
       collect_set(when(col("is_new") && col("bag_keep"),
-        kBucket(col("bag")))).as("kbks"))
+        KLog.bucket(col("bag")))).as("kbks"))
       .collect()
 
-    // the epoch's verdict layer: normally just the changed rows
-    // (O(batch + flips) write — newest row wins on read); a compaction
-    // writes the full merged state (carried rows + changes) and resets
-    // every bucket's layer list to this epoch. Layout mirrors the fp
-    // state: full-copy layers (founding + compaction) bucket=
-    // partitioned for pruned reads, tail DELTA layers flat (see the fp
-    // layer's rationale — the exact changed-row bucket set rides the
-    // dAgg collect, so the flat path needs no listing job either).
-    val vPtrApp: Map[Int, Seq[Long]] = {
-      val changed = assembled.drop("kept_prev", "is_new")
-      val vDir = s"$outDir/state/vbkt/epoch=$epochId"
-      // write parallelism from the driver-known CHANGED-ROW count (the
-      // fp tally is the wrong proxy here: a founding batch of short or
-      // heavily-duplicated docs has ~0 distinct fps but corpus-scale
-      // verdict rows, and would funnel through one task)
-      val nChanged = dAgg.iterator.map(_.getLong(10)).sum
-      val vParts = math.min(8L, 1L + nChanged / 1000000L).toInt
-      // ONE copy of the delta frame for both layouts (see the fp layer)
-      val delta = changed.withColumn("bucket", vBucket(col("doc_id")))
-        .coalesce(vParts)
-      if (dAgg.isEmpty && !mustCompactV) vPtrBase
-      else if (mustCompactV || vPtrBase.isEmpty) {
-        val layer =
-          if (mustCompactV)
-            readVBuckets(spark, outDir, vPtrBase, None)
-              .join(broadcast(changed.select(col("doc_id"))),
-                Seq("doc_id"), "left_anti")
-              .unionByName(changed)
-              .withColumn("bucket", vBucket(col("doc_id")))
-              .coalesce(8)
-          else delta
-        layer.write.mode(SaveMode.Overwrite).partitionBy("bucket")
-          .parquet(vDir)
-        val written = listPartitionInts(spark, vDir, "bucket=")
-        if (mustCompactV) written.map(_ -> Seq(epochId)).toMap
-        else appendPtr(vPtrBase, written, epochId)
-      } else {
-        delta.write.mode(SaveMode.Overwrite).parquet(vDir)
-        val changedBuckets = dAgg.iterator.flatMap(_.getSeq[Int](9)).toSet
-        appendPtr(vPtrBase, changedBuckets.toSeq.sorted, epochId)
-      }
-    }
-    // rolling fold — newest-wins resolved by one max_by aggregation over
-    // the rolled slice (a bounded exchange, constant job count)
-    val vPtrNew: Map[Int, Seq[Long]] =
-      if (!rollTurn("vbkt", epochId, vPtrApp)) vPtrApp
-      else rollFamily(spark, outDir, "vbkt", vPtrApp, VBuckets, epochId,
-        rolled => readVBuckets(spark, outDir, vPtrApp, Some(rolled))
-          .withColumn("bucket", vBucket(col("doc_id"))))
-    // keeper side-state layer: one row per bag whose keeper CHANGED this
+    // the epoch's verdict layer: the changed rows (newest row wins on
+    // read). Write parallelism from the driver-known CHANGED-ROW count
+    // (the fp tally is the wrong proxy here: a founding batch of short or
+    // heavily-duplicated docs has ~0 distinct fps but corpus-scale
+    // verdict rows); the exact changed-row bucket set rides the dAgg
+    // collect
+    val vApp = VLog.append(spark, outDir, epochId, prev.v,
+      assembled.drop("kept_prev", "is_new")
+        .withColumn("bucket", VLog.bucket(col("doc_id")))
+        .coalesce(math.min(8L,
+          1L + dAgg.iterator.map(_.getLong(10)).sum / 1000000L).toInt),
+      dAgg.iterator.flatMap(_.getSeq[Int](9)).toSet.toSeq.sorted)
+    // the epoch's keeper layer: one row per bag whose keeper CHANGED this
     // epoch (fresh bags elect their batch minimum; displaced keepers hand
     // off to it) — ≤ batch-bag-scale, derived from the checkpointed
-    // batchMin/bagMatch probes, no state re-read. The founding epoch and
-    // a changed KBuckets constant instead write the full merged keeper
-    // copy, bucket-partitioned.
-    val kDelta = batchMin
-      .join(broadcast(bagMatch.select(col("bag"), col("k_id"))), Seq("bag"), "left")
-      .filter(col("k_id").isNull || col("b_min") < col("k_id"))
-      .select(col("bag"), col("b_min").as("keeper"))
-    val mustCompactK = kPtrBase.nonEmpty && kNBBase != KBuckets
-    val kPtrApp: Map[Int, Seq[Long]] = {
-      val kDir = s"$outDir/state/kbkt/epoch=$epochId"
-      if (mustCompactK || kPtrBase.isEmpty) {
-        // founding / re-bucket: the full keeper copy (base newest-wins
-        // merged, this epoch's changes applied), partitioned for pruned
-        // reads. The founding base is empty, so its layer IS the delta.
-        val layer = readKBuckets(spark, outDir, kPtrBase, None)
-          .join(broadcast(kDelta.select(col("bag"))), Seq("bag"), "left_anti")
-          .unionByName(kDelta)
-          .withColumn("bucket", kBucket(col("bag")))
-          .coalesce(8)
-        layer.write.mode(SaveMode.Overwrite).partitionBy("bucket")
-          .parquet(kDir)
-        listPartitionInts(spark, kDir, "bucket=")
-          .map(_ -> Seq(epochId)).toMap
-      } else if (dAgg.iterator.map(_.getLong(11)).sum == 0L) {
-        // the steady common case — no fresh bag elected and no keeper
-        // displaced (driver-known from the delta agg's d_keep) — writes
-        // NO kbkt layer at all: kDelta is provably empty, so the write
-        // and its read-back were two wasted jobs per such epoch
-        kPtrBase
-      } else {
-        // tail delta: flat, bucket as a data column (see the fp layer's
-        // layout rationale); the touched-bucket set rides the delta agg
-        // (kbks — same rows as kDelta by the d_keep argument above), so
-        // the write needs neither a listing nor a read-back job
-        kDelta.withColumn("bucket", kBucket(col("bag"))).coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(kDir)
-        val kBk = dAgg.iterator.flatMap(_.getSeq[Int](12)).toSet
-        appendPtr(kPtrBase, kBk.toSeq.sorted, epochId)
-      }
-    }
-    val kPtrNew: Map[Int, Seq[Long]] =
-      if (!rollTurn("kbkt", epochId, kPtrApp)) kPtrApp
-      else rollFamily(spark, outDir, "kbkt", kPtrApp, KBuckets, epochId,
-        rolled => readKBuckets(spark, outDir, kPtrApp, Some(rolled))
-          .withColumn("bucket", kBucket(col("bag"))))
-
-    // window-log fold: once FpCompactAt flat tail batches accumulate,
-    // re-bucket the batches OLDER than this epoch into one immutable
-    // fp-bucketed chunk (`state/winvc/chunk=<e>`); the folded flats are
-    // pruned after the commit marker. Cost is O(folded batches) once per
-    // FpCompactAt epochs — batch-scale amortized, never O(log), because
-    // the founding mass was bucketed at birth and chunks are never
-    // merged or rewritten (the log is append-only: no row is ever
-    // superseded, so pruning works per chunk and no compaction of chunks
-    // into chunks is needed — each winv row is written at most twice).
-    val foldable: Seq[Long] = listPartitionLongs(spark,
-        s"$outDir/state/winv", "batch=")
-      .filter(b => b > prevWvFolded && b < epochId).toSeq.sorted
-    val wvFoldedNew: Long =
-      if (foldable.size < FpCompactAt) prevWvFolded
-      else {
-        val chunkDir = s"$outDir/state/winvc/chunk=$epochId"
-        val bytes = foldable.map(b =>
-          dirBytes(spark, s"$outDir/state/winv/batch=$b")).sum
-        val parts = math.min(8L, 1L + bytes / (256L << 20)).toInt
-        spark.read.schema(winvSchema(spark, withBatch = true))
-          .parquet(s"$outDir/state/winv")
-          .filter(col("batch").isInCollection(foldable))
-          .select(col("doc_id"), col("fp"))
-          .withColumn("bucket", fpBucket(col("fp")))
-          .coalesce(parts)
-          .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-          .parquet(chunkDir)
-        foldable.max
-      }
+    // batchMin/bagMatch probes, no state re-read. Its bucket set is the
+    // delta agg's kbks (same rows, by the d_keep argument), so the steady
+    // epoch that elects and displaces nothing writes no layer at all;
+    // write parallelism is sized from d_keep like the verdict layer's
+    val kApp = KLog.append(spark, outDir, epochId, prev.k,
+      batchMin
+        .join(broadcast(bagMatch.select(col("bag"), col("k_id"))), Seq("bag"), "left")
+        .filter(col("k_id").isNull || col("b_min") < col("k_id"))
+        .select(col("bag"), col("b_min").as("keeper"))
+        .withColumn("bucket", KLog.bucket(col("bag")))
+        .coalesce(math.min(8L,
+          1L + dAgg.iterator.map(_.getLong(11)).sum / 1000000L).toInt),
+      dAgg.iterator.flatMap(_.getSeq[Int](12)).toSet.toSeq.sorted)
+    // rolling folds — newest-wins resolved by one max_by aggregation over
+    // the rolled slice (a bounded exchange, constant job count)
+    val vNew = VLog.roll(spark, outDir, epochId, vApp, None)
+    val kNew = KLog.roll(spark, outDir, epochId, kApp, None)
 
     // QUARANTINE (gate-on only): contaminated fresh docs that would
-    // otherwise be kept park their text in `state/quar/batch=<e>` — the
-    // store [[regate]] resurrects from when a revised benchmark clears
-    // them (the corpus holds kept docs only, so without this their text
-    // would be unrecoverable; docs failing the doc-local gates can never
-    // flip kept under ANY benchmark, so only this would-be-kept slice
-    // needs parking). Skipped entirely when the batch contaminated
-    // nothing — driver-known from the delta agg.
+    // otherwise be kept park their text in [[QuarLog]] — the store
+    // [[regate]] resurrects from when a revised benchmark clears them
+    // (the corpus holds kept docs only, so without this their text would
+    // be unrecoverable; docs failing the doc-local gates can never flip
+    // kept under ANY benchmark, so only this would-be-kept slice needs
+    // parking). Skipped entirely when the batch contaminated nothing —
+    // driver-known from the delta agg.
     if (gateOn && dAgg.iterator.map(_.getLong(8)).sum > 0L) {
       val keptBase = Curation.keptExpr(col("n_tok"), col("h"),
         col("bag_keep"), Curation.spanDropExpr(col("n_win"), col("n_dup")))
@@ -1314,37 +1325,18 @@ object Pipeline {
         .join(batchText, Seq("doc_id"))
         .coalesce(1)
         .write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/state/quar/batch=$epochId")
+        .parquet(QuarLog.flatDir(outDir, epochId))
     }
 
-    // gate-revision log folds: winc (one flat dir per gate-on epoch) and
-    // quar (one per contaminating epoch) are append-only like the window
-    // log — a doc's decontam fps and quarantined text are written exactly
-    // once, at first sight — so the same chunk-fold machinery bounds
-    // their dir counts: once FpCompactAt flats below this epoch pile up
-    // they merge into one immutable chunk, the commit artifact records
-    // watermark + chunk liveness, cleanup prunes folded flats and orphan
-    // chunks, and [[regate]]'s reads list O(chunks + FpCompactAt flats)
-    // instead of O(gate-on epochs). Gate-off dirs have neither log; the
-    // two driver FS listings cost no job.
-    val prevWcFolded: Long = prevState.map(_.wcFolded).getOrElse(-1L)
-    val prevWcChunks: Seq[Long] = prevState.map(_.wcChunks).getOrElse(Nil)
-    val prevQFolded: Long = prevState.map(_.qFolded).getOrElse(-1L)
-    val prevQChunks: Seq[Long] = prevState.map(_.qChunks).getOrElse(Nil)
-    val wcFoldedNew: Long =
-      if (!gateOn) prevWcFolded
-      else foldBatchLog(spark, s"$outDir/state/winc", s"$outDir/state/wincc",
-        winvSchema(spark, withBatch = true), epochId, prevWcFolded)
-    val qFoldedNew: Long =
-      if (!gateOn) prevQFolded
-      else foldBatchLog(spark, s"$outDir/state/quar", s"$outDir/state/quarc",
-        quarSchema(spark), epochId, prevQFolded)
-    val wcChunksNew: Seq[Long] =
-      (prevWcChunks ++
-        (if (wcFoldedNew != prevWcFolded) Seq(epochId) else Nil)).distinct.sorted
-    val qChunksNew: Seq[Long] =
-      (prevQChunks ++
-        (if (qFoldedNew != prevQFolded) Seq(epochId) else Nil)).distinct.sorted
+    // batch-log folds: the flats below this epoch fold into one chunk
+    // once FpCompactAt pile up (the founding window batch is a chunk
+    // already). Gate-off dirs have no winc/quar root, whose listing is
+    // empty and folds nothing.
+    val wvNew = WinvLog.fold(spark, outDir, epochId,
+      if (winvIsChunk) prev.wv.copy(chunks = (prev.wv.chunks :+ epochId).sorted)
+      else prev.wv)
+    val wcNew = WincLog.fold(spark, outDir, epochId, prev.wc)
+    val qNew = QuarLog.fold(spark, outDir, epochId, prev.q)
 
     // (lang, source) -> (d_in, d_add, d_rem, d_tok_add, d_tok_rem, d_cont)
     val dRoll = dAgg.groupBy(r => (r.getString(0), r.getString(1)))
@@ -1361,10 +1353,8 @@ object Pipeline {
       .toMap
 
     // previous cumulative values, from the base's commit artifact
-    val prevRoll: Map[(String, String), RollRow] =
-      prevState.map(_.rollup).getOrElse(Map.empty)
-    val prevShardKept: Map[Int, Long] =
-      prevState.map(_.shardKept).getOrElse(Map.empty)
+    val prevRoll: Map[(String, String), RollRow] = prev.rollup
+    val prevShardKept: Map[Int, Long] = prev.shardKept
     val rollupNew: Map[(String, String), RollRow] =
       dRoll.foldLeft(prevRoll) { case (acc, (key, d)) =>
         val p = acc.getOrElse(key, RollRow(key._1, key._2, 0L, 0L, 0L, 0L))
@@ -1403,7 +1393,7 @@ object Pipeline {
       // shards this epoch never computed, then delete `deltas ∖ staged`
       // as "emptied". Rebuild instead.
       val stagingReusable = isCommitted(spark, stagingPath) &&
-        listPartitionInts(spark, stagingPath, "shard=").subsetOf(deltas.toSet)
+        childIds(spark, stagingPath, "shard=").subsetOf(deltas.map(_.toLong).toSet)
       if (!stagingReusable) {
         deleteDir(spark, stagingRoot) // a stale attempt against another base
         val addedContent = added
@@ -1452,13 +1442,8 @@ object Pipeline {
     // commit artifact LAST — the marker: pointer maps, cumulative rollup,
     // shard counts, and the result row land in ONE tiny write; epoch e's
     // _SUCCESS here ⇒ e fully applied
-    val wvChunksNew: Seq[Long] =
-      (prevWvChunks ++
-        (if (winvIsChunk) Seq(epochId) else Nil) ++
-        (if (wvFoldedNew != prevWvFolded) Seq(epochId) else Nil)).distinct.sorted
-    val stNew = EpochState(fpPtrNew, FpBuckets, vPtrNew, VBuckets,
-      rollupNew, shardKeptNew, kPtrNew, KBuckets, wvFoldedNew, wvChunksNew,
-      wcFoldedNew, wcChunksNew, qFoldedNew, qChunksNew, fpUnionNew)
+    val stNew = EpochState(fpNew, vNew, kNew, wvNew, wcNew, qNew,
+      rollupNew, shardKeptNew, fpUnionNew)
     val result = EpochResult(epochId, stNew.docsSeen, stNew.docsKept,
       nAdded, nRemoved, deltas)
     writeCommit(spark, outDir, epochId, stNew, result)
@@ -1483,7 +1468,7 @@ object Pipeline {
     */
   private def applyStagedShards(spark: SparkSession, corpusPath: String,
       stagingPath: String, deltas: Seq[Int]): Unit = {
-    val writtenShards = listPartitionInts(spark, stagingPath, "shard=")
+    val writtenShards = childIds(spark, stagingPath, "shard=").map(_.toInt)
     if (writtenShards.nonEmpty) {
       val newContent = spark.read.parquet(stagingPath)
         .select(col("doc_id"), col("lang"), col("source"), col("n_tok"),
@@ -1562,108 +1547,6 @@ object Pipeline {
   private val StateCols = Seq("doc_id", "lang", "source", "n_tok", "h",
     "bag", "bag_keep", "n_win", "n_dup", "contam", "kept")
 
-  /** Newest-row-wins per doc over a ranked candidate frame (StateCols +
-    * `_layer`) — one max_by aggregation, shuffling only the candidates.
-    */
-  private def mergeRankedVerdicts(cand: DataFrame): DataFrame =
-    cand.groupBy(col("doc_id")).agg(
-      max_by(struct(StateCols.filterNot(_ == "doc_id").map(col): _*),
-        col("_layer")).as("_s"))
-      .select(col("doc_id") +:
-        StateCols.filterNot(_ == "doc_id").map(c => col("_s." + c)): _*)
-
-  /** Path of layer `id` under family dir `fam` ("fpcnt" | "vbkt" |
-    * "kbkt"): positive id = `epoch=<id>` (a tail delta, or the founding /
-    * re-bucket full copy), negative id = `fold=<-id>` (a rolling-
-    * compaction full copy of a bucket subset written at epoch -id).
-    */
-  private def layerPath(outDir: String, fam: String, id: Long): String =
-    if (id >= 0L) s"$outDir/state/$fam/epoch=$id"
-    else s"$outDir/state/$fam/fold=${-id}"
-
-  /** The pointed layers of a bucketed family, oldest first, each filtered
-    * to the buckets whose pointer list actually CONTAINS that layer
-    * (intersected with `only` when given). The per-layer pointed-bucket
-    * filter is the liveness rule that makes rolling folds sound: after
-    * bucket b folds at epoch e (pointer reset to [-e]), older layers
-    * still physically hold b's superseded rows for as long as OTHER
-    * buckets reference them — a read filtered only by the requested set
-    * would double-count b. A row in layer L for bucket b is live iff
-    * L ∈ ptr(b), and that is exactly what each layer's filter applies
-    * (partition-pruned on bucketed full copies, a row filter on flat
-    * deltas). Rank order is by (|id|, sign) — consistent across buckets;
-    * no bucket's list ever holds both the fold and the delta of one
-    * epoch, so the sign tiebreak never decides precedence.
-    */
-  private def pointedLayers(spark: SparkSession, outDir: String, fam: String,
-      schema: org.apache.spark.sql.types.StructType,
-      ptr: Map[Int, Seq[Long]], only: Option[Set[Int]]): Seq[DataFrame] = {
-    val wanted = only.map(b => ptr.view.filterKeys(b).toMap).getOrElse(ptr)
-    val ids = wanted.values.flatten.toSet.toSeq
-      .sortBy((id: Long) => (math.abs(id), id))
-    ids.map { id =>
-      val live = ptr.iterator
-        .collect { case (b, es) if es.contains(id) => b }.toSet
-      val sel = only.map(_ & live).getOrElse(live)
-      spark.read.schema(schema).parquet(layerPath(outDir, fam, id))
-        .filter(col("bucket").isInCollection(sel.toSeq.sorted))
-    }
-  }
-
-  /** Pointed verdict layers (optionally bucket-pruned), each row tagged
-    * with a `_layer` rank (higher = newer). Callers shrink the row set
-    * FIRST (flip semi-join, presence probe), then resolve
-    * newest-row-wins per doc via `max_by(_layer)` over the small
-    * candidate set — the steady-state read path. Materializing the full
-    * merged view ([[readVBuckets]]) is reserved for compaction,
-    * fold, and regate passes: its one max_by aggregation exchanges
-    * the whole read set, which a steady-state epoch must not pay.
-    */
-  private def vLayersRanked(spark: SparkSession, outDir: String,
-      ptr: Map[Int, Seq[Long]], only: Option[Set[Int]]): DataFrame =
-    pointedLayers(spark, outDir, "vbkt", vbktSchema(spark), ptr, only)
-      .zipWithIndex.map { case (df, rank) =>
-        df.select(StateCols.map(col): _*).withColumn("_layer", lit(rank)) }
-      .reduceOption(_ unionByName _)
-      .getOrElse(emptyVerdictState(spark).withColumn("_layer", lit(0)))
-
-  /** Merged view of the pointed verdict LAYERS, optionally restricted to
-    * a bucket subset (partition-pruned reads). Newest row wins per doc,
-    * resolved by ONE max_by aggregation over all pointed rows — an
-    * O(read-set) exchange, which is the right trade for this path's
-    * callers (re-buckets, folds, [[regate]] — all declared
-    * O(state) passes). A broadcast-shadow anti-join chain would be
-    * exchange-free but assumes every non-oldest layer is batch-scale; a
-    * rolling FOLD layer holds up to half the state's rows, so that
-    * shape would broadcast corpus-scale key sets at deployment scale
-    * (driver OOM / the 8 GB broadcast cap). A row's bucket is a pure
-    * hash of its key, so bucket pruning never splits a key across
-    * layers.
-    */
-  private def readVBuckets(spark: SparkSession, outDir: String,
-      ptr: Map[Int, Seq[Long]], only: Option[Set[Int]]): DataFrame =
-    mergeRankedVerdicts(vLayersRanked(spark, outDir, ptr, only))
-
-  /** Ranked layers of the bag-keyed keeper side-state (`(bag, keeper)`
-    * rows; see [[KBuckets]]) — the displacement probe's read path.
-    */
-  private def kLayersRanked(spark: SparkSession, outDir: String,
-      ptr: Map[Int, Seq[Long]], only: Option[Set[Int]]): DataFrame =
-    pointedLayers(spark, outDir, "kbkt", kbktSchema(spark), ptr, only)
-      .zipWithIndex.map { case (df, rank) =>
-        df.select(col("bag"), col("keeper")).withColumn("_layer", lit(rank)) }
-      .reduceOption(_ unionByName _)
-      .getOrElse(emptyKeeperState(spark).withColumn("_layer", lit(0)))
-
-  /** Merged (newest-wins) view of the keeper side-state — compaction and
-    * fold epochs only; same merge trade as [[readVBuckets]].
-    */
-  private def readKBuckets(spark: SparkSession, outDir: String,
-      ptr: Map[Int, Seq[Long]], only: Option[Set[Int]]): DataFrame =
-    kLayersRanked(spark, outDir, ptr, only)
-      .groupBy(col("bag"))
-      .agg(max_by(col("keeper"), col("_layer")).as("keeper"))
-
   /** Benchmark fingerprint: (distinct window-fp count, their bit-XOR) —
     * cheap, order-free, and collision-safe enough to catch a swapped or
     * toggled benchmark loudly. `(0, 0)` means "gate off".
@@ -1708,24 +1591,8 @@ object Pipeline {
       // it was handed the SAME benchmark before re-pinning the meta
       regateSig.map(s => CommitRow("rg", epoch = Some(epochId),
         bench_n = Some(s._1), bench_x = Some(s._2))).toSeq ++
-      st.fpPtr.toSeq.sortBy(_._1).flatMap { case (b, es) =>
-        es.map(e => CommitRow("fp", bucket = Some(b), epoch = Some(e),
-          n_buckets = Some(st.fpNB))) } ++
-      st.vPtr.toSeq.sortBy(_._1).flatMap { case (b, es) =>
-        es.map(e => CommitRow("v", bucket = Some(b), epoch = Some(e),
-          n_buckets = Some(st.vNB))) } ++
-      st.kPtr.toSeq.sortBy(_._1).flatMap { case (b, es) =>
-        es.map(e => CommitRow("k", bucket = Some(b), epoch = Some(e),
-          n_buckets = Some(st.kNB))) } ++
-      (if (st.wvFolded >= 0L)
-        Seq(CommitRow("wv", epoch = Some(st.wvFolded))) else Nil) ++
-      st.wvChunks.sorted.map(c => CommitRow("wvc", epoch = Some(c))) ++
-      (if (st.wcFolded >= 0L)
-        Seq(CommitRow("wc", epoch = Some(st.wcFolded))) else Nil) ++
-      st.wcChunks.sorted.map(c => CommitRow("wcc", epoch = Some(c))) ++
-      (if (st.qFolded >= 0L)
-        Seq(CommitRow("qf", epoch = Some(st.qFolded))) else Nil) ++
-      st.qChunks.sorted.map(c => CommitRow("qfc", epoch = Some(c))) ++
+      st.bucketed.flatMap { case (log, l) => log.encode(l) } ++
+      st.batched.flatMap { case (log, b) => log.encode(b) } ++
       st.fpUnion.toSeq.sorted.map(b => CommitRow("fpu", bucket = Some(b))) ++
       st.rollup.values.toSeq.sortBy(r => (r.lang, r.source)).map(r =>
         CommitRow("roll", lang = Some(r.lang), source = Some(r.source),
@@ -1755,32 +1622,16 @@ object Pipeline {
     cached match {
       case Some((_, st)) => st
       case None =>
-        val rows = readCommit(spark, outDir, e)
-        val fp = rows.filter(_.kind == "fp")
-        val v = rows.filter(_.kind == "v")
-        val k = rows.filter(_.kind == "k")
-        def ptrOf(rs: Array[CommitRow]): Map[Int, Seq[Long]] =
-          rs.groupBy(_.bucket.get)
-            .view.mapValues(_.map(_.epoch.get).toSeq.sorted).toMap
-        val st = EpochState(
-          ptrOf(fp),
-          fp.headOption.flatMap(_.n_buckets).getOrElse(FpBuckets),
-          ptrOf(v),
-          v.headOption.flatMap(_.n_buckets).getOrElse(VBuckets),
+        val rows = readCommit(spark, outDir, e).toSeq
+        val st = EpochState(FpLog.decode(rows), VLog.decode(rows),
+          KLog.decode(rows), WinvLog.decode(rows), WincLog.decode(rows),
+          QuarLog.decode(rows),
           rows.filter(_.kind == "roll").map(r =>
             (r.lang.get, r.source.get) -> RollRow(r.lang.get, r.source.get,
               r.docs_in.get, r.docs_kept.get, r.tokens_kept.get,
               r.docs_contam.getOrElse(0L))).toMap,
           rows.filter(_.kind == "shard")
             .map(r => r.shard.get -> r.n_kept.get).toMap,
-          ptrOf(k),
-          k.headOption.flatMap(_.n_buckets).getOrElse(KBuckets),
-          rows.find(_.kind == "wv").flatMap(_.epoch).getOrElse(-1L),
-          rows.filter(_.kind == "wvc").flatMap(_.epoch).toSeq.sorted,
-          rows.find(_.kind == "wc").flatMap(_.epoch).getOrElse(-1L),
-          rows.filter(_.kind == "wcc").flatMap(_.epoch).toSeq.sorted,
-          rows.find(_.kind == "qf").flatMap(_.epoch).getOrElse(-1L),
-          rows.filter(_.kind == "qfc").flatMap(_.epoch).toSeq.sorted,
           rows.filter(_.kind == "fpu").flatMap(_.bucket).toSet)
         requireCurrentLayout(spark, outDir, None, Some(st))
         if (useCache) stateCache.put(outDir, (e, st))
@@ -1798,7 +1649,7 @@ object Pipeline {
     * chunks or the keepers would be read as empty, silently wrong).
     */
   private def requireCurrentLayout(spark: SparkSession, outDir: String,
-      meta: Option[org.apache.spark.sql.Row], st: Option[EpochState]): Unit = {
+      meta: Option[Row], st: Option[EpochState]): Unit = {
     val verdictsDir = new org.apache.hadoop.fs.Path(s"$outDir/state/verdicts")
     val outdated = Seq(
       "meta without bench_on" ->
@@ -1806,9 +1657,9 @@ object Pipeline {
       "state/verdicts" -> (meta.isDefined && verdictsDir
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
         .exists(verdictsDir)),
-      "commit without wvc rows" -> st.exists(_.wvChunks.isEmpty),
+      "commit without wvc rows" -> st.exists(_.wv.chunks.isEmpty),
       "commit without k rows" ->
-        st.exists(s => s.docsSeen > 0L && s.kPtr.isEmpty))
+        st.exists(s => s.docsSeen > 0L && s.k.ptr.isEmpty))
       .collect { case (what, true) => what }
     require(outdated.isEmpty,
       s"$outDir was written by an outdated state layout " +
@@ -1817,89 +1668,34 @@ object Pipeline {
   }
 
   /** Post-marker cleanup for a committed epoch — idempotent, re-runnable
-    * by a replay that arrives after the marker: drop superseded commit /
-    * verdict / fpcnt state (bucket epochs stay alive exactly as long as
-    * the CURRENT pointer maps reference them), the epoch's transient
-    * staging, and folded or orphaned batch-log dirs.
-    * `stIn` carries the referenced sets on the normal commit path; the
-    * replay short-circuit re-reads them from the commit artifact (never
-    * the JVM cache — a wiped-and-recreated outDir must not prune against
-    * a stale image).
+    * by a replay that arrives after the marker: drop superseded commit
+    * artifacts, every log's dead dirs (layers the CURRENT pointer maps no
+    * longer reference — a bucket an epoch didn't touch keeps pointing at
+    * its older copy; folded flats and orphan chunks), and the epoch's
+    * transient staging. `stIn` carries the live sets on the normal
+    * commit path; the replay short-circuit re-reads them from the commit
+    * artifact (never the JVM cache — a wiped-and-recreated outDir must
+    * not prune against a stale image).
     */
   private def cleanupAfterCommit(spark: SparkSession, outDir: String,
       epochId: Long, stIn: Option[EpochState]): Unit = {
     val st: EpochState = stIn.getOrElse(
       loadEpochState(spark, outDir, epochId, useCache = false))
-    listPartitionLongs(spark, s"$outDir/state/commit", "epoch=")
-      .filter(_ < epochId)
+    childIds(spark, s"$outDir/state/commit", "epoch=").filter(_ < epochId)
       .foreach(e => deleteDir(spark, s"$outDir/state/commit/epoch=$e"))
-    // family layer dirs: epoch=e live iff not yet superseded or referenced;
-    // fold=f dirs are referenced as the NEGATIVE id -f
-    def pruneFamily(dir: String, refs: Set[Long]): Unit = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
-        fs.listStatus(p).toSeq.map(_.getPath).foreach { d =>
-          val n = d.getName
-          val dead =
-            if (n.startsWith("epoch=")) {
-              val e = n.stripPrefix("epoch=").toLong
-              e < epochId && !refs.contains(e)
-            } else if (n.startsWith("fold=")) {
-              val f = n.stripPrefix("fold=").toLong
-              f < epochId && !refs.contains(-f)
-            } else false
-          if (dead) { fs.delete(d, true); () }
-        }
-    }
-    // bucket state lives as long as the CURRENT pointer maps reference it
-    // (a bucket an epoch didn't touch keeps pointing at its older copy)
-    pruneFamily(s"$outDir/state/fpcnt", st.fpPtr.values.flatten.toSet)
-    pruneFamily(s"$outDir/state/vbkt", st.vPtr.values.flatten.toSet)
-    pruneFamily(s"$outDir/state/kbkt", st.kPtr.values.flatten.toSet)
-    // batch-keyed append-only logs (window log + the gate-revision
-    // logs), one shared rule: flats folded into a chunk are superseded
-    // once the fold's commit landed; chunks themselves are immutable and
-    // permanent EXCEPT orphans — a chunk written by a crashed attempt
-    // whose batch later re-processed under a different id (replaced
-    // checkpoint) is referenced by no commit's live set and is deleted
-    // rather than duplicating the log's rows in every later read. An
-    // empty live list prunes no chunk (it can only prune less).
-    def pruneBatchLog(flatRoot: String, chunkRoot: String,
-        folded: Long, chunks: Seq[Long]): Unit = {
-      if (folded >= 0L)
-        listPartitionLongs(spark, flatRoot, "batch=").filter(_ <= folded)
-          .foreach(b => deleteDir(spark, s"$flatRoot/batch=$b"))
-      if (chunks.nonEmpty) {
-        val live = chunks.toSet
-        listPartitionLongs(spark, chunkRoot, "chunk=")
-          .filter(c => c < epochId && !live.contains(c))
-          .foreach(c => deleteDir(spark, s"$chunkRoot/chunk=$c"))
-      }
-    }
-    pruneBatchLog(s"$outDir/state/winv", s"$outDir/state/winvc",
-      st.wvFolded, st.wvChunks)
-    pruneBatchLog(s"$outDir/state/winc", s"$outDir/state/wincc",
-      st.wcFolded, st.wcChunks)
-    pruneBatchLog(s"$outDir/state/quar", s"$outDir/state/quarc",
-      st.qFolded, st.qChunks)
+    st.bucketed.foreach { case (log, l) => log.prune(spark, outDir, l, epochId) }
+    st.batched.foreach { case (log, b) => log.prune(spark, outDir, b, epochId) }
     // drop this epoch's own staging and every superseded attempt — but
     // SPARE a newer in-flight regate's root: its `bsig` fingerprint is
     // both the guard that keeps epochs from running over the
     // half-revised corpus and the key that lets the regate resume with
     // its original benchmark (belt to the guard's braces — the guard
     // refuses such epochs outright, so this path should never see one)
-    locally {
-      val p = new org.apache.hadoop.fs.Path(s"$outDir/state/staging")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
-        fs.listStatus(p).toSeq.map(_.getPath).foreach { d =>
-          val n = d.getName
-          val spare = n.startsWith("regate=") &&
-            n.stripPrefix("regate=").toLong > epochId
-          if (!spare) { fs.delete(d, true); () }
-        }
-    }
+    val staging = s"$outDir/state/staging"
+    childIds(spark, staging, "epoch=")
+      .foreach(e => deleteDir(spark, s"$staging/epoch=$e"))
+    childIds(spark, staging, "regate=").filter(_ <= epochId)
+      .foreach(r => deleteDir(spark, s"$staging/regate=$r"))
   }
 
   /** The persisted result row of a committed epoch (written inside its
@@ -1928,23 +1724,13 @@ object Pipeline {
     * `hasDataFiles` alone would mistake for a complete state).
     */
   private def committedEpochs(spark: SparkSession, outDir: String): Seq[Long] =
-    listPartitionLongs(spark, s"$outDir/state/commit", "epoch=").toSeq
+    childIds(spark, s"$outDir/state/commit", "epoch=").toSeq
       .filter(e => isCommitted(spark, s"$outDir/state/commit/epoch=$e"))
 
-  /** Integer suffixes of `<prefix>N` child dirs under `dir` — the free
+  /** Numeric suffixes of the `<prefix>N` child dirs of `dir` — the free
     * (listing-only) way to learn which partitions a write landed.
     */
-  private def listPartitionInts(spark: SparkSession, dir: String,
-      prefix: String): Set[Int] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(prefix))
-      .map(_.stripPrefix(prefix).toInt).toSet
-  }
-
-  private def listPartitionLongs(spark: SparkSession, dir: String,
+  private def childIds(spark: SparkSession, dir: String,
       prefix: String): Set[Long] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1952,35 +1738,6 @@ object Pipeline {
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(_.startsWith(prefix))
       .map(_.stripPrefix(prefix).toLong).toSet
-  }
-
-  /** Fold the accumulated flat `batch=` dirs of an append-only batch-
-    * keyed log into ONE immutable chunk dir (`<chunkRoot>/chunk=<epoch>`,
-    * `batch` carried as a data column) once [[FpCompactAt]] of them pile
-    * up below `epochId` — the same dir-count bound the window-log fold
-    * gives `state/winv`, applied to the gate-revision logs (`state/winc`
-    * decontam fps, `state/quar` quarantine texts), whose flat dirs
-    * otherwise grow one per gate-on epoch for the stream's lifetime.
-    * Returns the new folded-through watermark (or `prevFolded` when no
-    * fold ran). Deterministic per epoch, so a crash replay rewrites the
-    * same chunk; the caller records liveness in the commit artifact and
-    * cleanup prunes folded flats and orphan chunks after the marker.
-    */
-  private def foldBatchLog(spark: SparkSession, flatRoot: String,
-      chunkRoot: String, schema: org.apache.spark.sql.types.StructType,
-      epochId: Long, prevFolded: Long): Long = {
-    val foldable = listPartitionLongs(spark, flatRoot, "batch=")
-      .filter(b => b > prevFolded && b < epochId).toSeq.sorted
-    if (foldable.size < FpCompactAt) prevFolded
-    else {
-      val bytes = foldable.map(b => dirBytes(spark, s"$flatRoot/batch=$b")).sum
-      val parts = math.min(8L, 1L + bytes / (256L << 20)).toInt
-      spark.read.schema(schema).parquet(flatRoot)
-        .filter(col("batch").isInCollection(foldable))
-        .coalesce(parts)
-        .write.mode(SaveMode.Overwrite).parquet(s"$chunkRoot/chunk=$epochId")
-      foldable.max
-    }
   }
 
   /** Recursive byte size of `dir` (driver FS metadata — free on local
@@ -2019,64 +1776,16 @@ object Pipeline {
       spark.range(0).select(col("id").as("doc_id"), col("id").as("fp")))
       .withColumn("contam", lit(false)).select(StateCols.map(col): _*)
 
-  /** Empty keeper side-state frame — the epoch-0 base and the schema
-    * anchor for [[kbktSchema]].
+  /** Explicit read schemas of the state dirs, memoized per JVM. A
+    * schema-inferring `spark.read.parquet` runs a footer-read job per
+    * call, and one steady-state epoch opens these dirs a dozen-plus times
+    * — at ~20–50 ms of job+scheduling latency each, inference was a
+    * visible slice of the fixed per-epoch overhead. Derived THROUGH the
+    * producer formulas (one-copy rule) so a formula change can never
+    * strand a stale shape here; a StructType is session-independent, and
+    * the derivation analyzes a multi-join plan, so it runs once.
     */
-  private def emptyKeeperState(spark: SparkSession): DataFrame =
-    spark.range(0).select(lit("").cast("string").as("bag"),
-      col("id").as("keeper"))
-
-  /** Explicit read schemas for the hot state dirs. A schema-inferring
-    * `spark.read.parquet` runs a footer-read job per call, and one
-    * steady-state epoch opens these dirs a dozen-plus times (three
-    * layered verdict probes × pointed layers, the fp layers, the winv
-    * log) — at ~20–50 ms of job+scheduling latency each, inference was
-    * a visible slice of the fixed per-epoch overhead. Derived THROUGH
-    * the producer formulas (one-copy rule) so a formula change can
-    * never strand a stale shape here; `bucket`/`batch` resolve as
-    * partition columns on partitioned layers and as data columns on
-    * flat delta layers — the same schema satisfies both layouts.
-    */
-  // memoized per JVM (a StructType is session-independent, and the
-  // derivation analyzes a multi-join plan — not something to re-run on
-  // every one of an epoch's dozen-plus layer opens)
-  private val stateSchemas =
-    scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]()
-  private def vbktSchema(spark: SparkSession) =
-    stateSchemas.getOrElseUpdate("vbkt",
-      emptyVerdictState(spark).withColumn("bucket", vBucket(col("doc_id")))
-        .schema)
-  private def fpcntSchema(spark: SparkSession) =
-    stateSchemas.getOrElseUpdate("fpcnt",
-      spark.range(0).select(col("id").as("fp"), col("id").as("nd"),
-        fpBucket(col("id")).as("bucket")).schema)
-  private def kbktSchema(spark: SparkSession) =
-    stateSchemas.getOrElseUpdate("kbkt",
-      emptyKeeperState(spark).withColumn("bucket", kBucket(col("bag")))
-        .schema)
-  private def winvSchema(spark: SparkSession, withBatch: Boolean) =
-    stateSchemas.getOrElseUpdate(s"winv:$withBatch", {
-      val base = Curation.winFpsOver(
-        spark.range(0).select(col("id").as("doc_id"),
-          array(lit("")).as("toks")), 1)
-      (if (withBatch) base.withColumn("batch", col("doc_id")) else base).schema
-    })
-  private def winvcSchema(spark: SparkSession) =
-    stateSchemas.getOrElseUpdate("winvc",
-      Curation.winFpsOver(
-        spark.range(0).select(col("id").as("doc_id"),
-          array(lit("")).as("toks")), 1)
-        .withColumn("bucket", fpBucket(col("fp"))).schema)
-  // quarantine rows: the verdict-state identity columns + the parked
-  // text; `batch` resolves as a partition column on the flat batch= dirs
-  // and as a data column on folded chunks (same rule as winvSchema)
-  private def quarSchema(spark: SparkSession) =
-    stateSchemas.getOrElseUpdate("quar",
-      emptyVerdictState(spark)
-        .select(col("doc_id"), col("lang"), col("source"), col("n_tok"))
-        .withColumn("text", lit("").cast("string"))
-        .withColumn("batch", col("doc_id"))
-        .schema)
+  private val stateSchemas = scala.collection.concurrent.TrieMap[String, StructType]()
 
   /** Attach the incremental pipeline to a document stream with `doc_id`,
     * `lang`, `source`, `text`. `benchmark` enables the decontamination
@@ -2209,7 +1918,7 @@ object Pipeline {
           "state was never evaluated against; replay a regate only with its original benchmark")
       repinMeta()
       cleanupAfterCommit(spark, outDir, epochId, None)
-      pruneQuarBefore(spark, outDir, epochId)
+      QuarLog.pruneBefore(spark, outDir, epochId)
       return readEpochResult(spark, outDir, epochId)
     }
     require(committed.forall(_ < epochId),
@@ -2240,7 +1949,7 @@ object Pipeline {
           "apply may already have landed; finish it with its original " +
           "benchmark, then revise at the next epoch id")
     } else {
-      require(!isCommitted(spark, s"$outDir/state/quar/batch=$epochId"),
+      require(!isCommitted(spark, QuarLog.flatDir(outDir, epochId)),
         s"epoch $epochId in $outDir already has a quarantine flat but no " +
           "in-flight regate fingerprint — either an ORDINARY epoch " +
           "crashed at this id (replay that epoch / resume the stream, " +
@@ -2258,31 +1967,15 @@ object Pipeline {
     // are clean by the same rule the epochs apply). The matched set is
     // contamination-sized, joined plain (it can be corpus-scale under an
     // adversarial revision — this is the declared O(corpus) pass).
-    val wincPath = s"$outDir/state/winc"
-    // the watermark filter matches the crossing read's rule: a crash
-    // between a fold's commit and its cleanup leaves the folded flats on
-    // disk, and without the bound they would be read twice (once flat,
-    // once from the live chunk) — harmless for correctness (distinct /
-    // dropDuplicates downstream) but wasted I/O on the O(corpus) pass
-    val wincFlat =
-      if (hasDataFiles(spark, wincPath))
-        spark.read.schema(winvSchema(spark, withBatch = true))
-          .parquet(wincPath).filter(col("batch") > st.wcFolded)
-      else spark.range(0).select(col("id").as("doc_id"), col("id").as("fp"),
-        col("id").as("batch"))
-    // folded chunks carry `batch` as a data column; the liveness list is
-    // authoritative (orphans from crashed fold attempts are never read)
-    val winc = st.wcChunks
-      .map(c => spark.read.schema(winvSchema(spark, withBatch = true))
-        .parquet(s"$outDir/state/wincc/chunk=$c"))
-      .foldLeft(wincFlat)(_ unionByName _)
-      .filter(col("batch") <= last)
-      .select(col("doc_id"), col("fp"))
+    // the live flats ≤ the base and the live chunks: the watermark skips
+    // folded flats a crash left between a fold's commit and its cleanup
+    // (harmless — distinct downstream — but wasted I/O on this pass)
+    val winc = WincLog.live(spark, outDir, st.wc, last, Seq("doc_id", "fp"), None)
     val contam2 = Curation.contaminatedOf(winc, fps2)
       .withColumn("_c2", lit(true))
     val keptBase = Curation.keptExpr(col("n_tok"), col("h"),
       col("bag_keep"), Curation.spanDropExpr(col("n_win"), col("n_dup")))
-    val v2 = readVBuckets(spark, outDir, st.vPtr, None)
+    val v2 = VLog.merge(VLog.read(spark, outDir, st.v, None))
       .withColumnRenamed("contam", "_c1").withColumnRenamed("kept", "_k1")
       .join(contam2, Seq("doc_id"), "left")
       .withColumn("contam", coalesce(col("_c2"), lit(false)))
@@ -2325,24 +2018,14 @@ object Pipeline {
       if (hasDataFiles(spark, corpusPath))
         spark.read.parquet(corpusPath).select(col("doc_id"), col("text"))
       else emptyText
-    val quarPath = s"$outDir/state/quar"
-    val quarFlat =
-      if (hasDataFiles(spark, quarPath))
-        spark.read.schema(quarSchema(spark)).parquet(quarPath)
-          .filter(col("batch") > st.qFolded) // same crash-window bound
-          .select(col("doc_id"), col("text"))
-      else emptyText
-    val oldQuar = st.qChunks
-      .map(c => spark.read.schema(quarSchema(spark))
-        .parquet(s"$outDir/state/quarc/chunk=$c")
-        .select(col("doc_id"), col("text")))
-      .foldLeft(quarFlat)(_ unionByName _)
+    val oldQuar = QuarLog.live(spark, outDir, st.q, Long.MaxValue,
+      Seq("doc_id", "text"), None)
     val textAll = corpusText.unionByName(oldQuar).dropDuplicates("doc_id")
 
     // new quarantine, consolidated and committed BEFORE the corpus
     // overwrite (a crash replay re-derives it from the still-intact
     // corpus; once its _SUCCESS exists the content is final)
-    val quarDir = s"$outDir/state/quar/batch=$epochId"
+    val quarDir = QuarLog.flatDir(outDir, epochId)
     if (!isCommitted(spark, quarDir)) {
       val quarJoined = v2.filter(col("contam") && keptBase)
         .select(col("doc_id"), col("lang"), col("source"), col("n_tok"))
@@ -2400,50 +2083,23 @@ object Pipeline {
 
     // the v2 verdict state is a fresh full copy — every bucket points at
     // this epoch; fp counts, keepers, and the window logs are untouched
-    // (contamination affects neither window counts nor keeper elections)
-    val vDir = s"$outDir/state/vbkt/epoch=$epochId"
-    v2.select(StateCols.map(col): _*)
-      .withColumn("bucket", vBucket(col("doc_id")))
-      .coalesce(8)
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(vDir)
-    val vPtr2 = listPartitionInts(spark, vDir, "bucket=")
-      .map(_ -> Seq(epochId)).toMap
-    // quarantine liveness resets: the regate's consolidated batch=<id>
-    // flat subsumes every earlier quar flat AND chunk (pruneQuarBefore
-    // drops them after the marker), so the new state starts the quar
-    // fold cycle over; the winc log is untouched and carries forward
-    val stNew = EpochState(st.fpPtr, st.fpNB, vPtr2, VBuckets,
-      rollup2, shardKept2, st.kPtr, st.kNB, st.wvFolded, st.wvChunks,
-      st.wcFolded, st.wcChunks, -1L, Nil, st.fpUnion)
+    // (contamination affects neither window counts nor keeper
+    // elections). The regate's consolidated quarantine flat subsumes
+    // every earlier quar flat AND chunk (dropped after the marker), so
+    // the quarantine log starts over; the winc log carries forward
+    val stNew = st.copy(
+      v = VLog.writeFull(spark, outDir, epochId,
+        v2.select(StateCols.map(col): _*)
+          .withColumn("bucket", VLog.bucket(col("doc_id"))).coalesce(8)),
+      rollup = rollup2, shardKept = shardKept2, q = Batches(-1L, Nil))
     val result = EpochResult(epochId, stNew.docsSeen, stNew.docsKept,
       nAdded, nRemoved, deltas)
     writeCommit(spark, outDir, epochId, stNew, result,
       regateSig = Some(sig2))
     cleanupAfterCommit(spark, outDir, epochId, Some(stNew))
-    pruneQuarBefore(spark, outDir, epochId)
+    QuarLog.pruneBefore(spark, outDir, epochId)
     repinMeta() // LAST: meta never points at an uncommitted gate regime
     result
-  }
-
-  /** Drop quarantine batches superseded by a regate's consolidated
-    * rewrite (every pre-regate row either moved into the new batch or
-    * became permanently unresurrectable).
-    */
-  private def pruneQuarBefore(spark: SparkSession, outDir: String,
-      epochId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/state/quar")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      fs.listStatus(p).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("batch="))
-        .filter(_.getName.stripPrefix("batch=").toLong < epochId)
-        .foreach(d => fs.delete(d, true))
-    // folded quar chunks are superseded the same way (the regate's state
-    // records qChunks = Nil, so cleanup's liveness rule would never
-    // touch them — this explicit prune is their retirement path)
-    listPartitionLongs(spark, s"$outDir/state/quarc", "chunk=")
-      .filter(_ < epochId)
-      .foreach(c => deleteDir(spark, s"$outDir/state/quarc/chunk=$c"))
   }
 
   /** Post-copy/post-migration audit: recompute the shard manifest from the
@@ -2458,13 +2114,13 @@ object Pipeline {
     */
   def validateCorpus(spark: SparkSession, outDir: String): org.apache.spark.sql.DataFrame = {
     val metaRow = spark.read.parquet(s"$outDir/meta").head()
+    requireCurrentLayout(spark, outDir, Some(metaRow), None)
     val numShards = metaRow.getAs[Int]("num_shards")
     // gated deployments: the report's docs_contaminated column must agree
     // with the committed rollup (driver-side, ≤ |lang×source| rows) — a
     // report tampered with or restored from the wrong run fails LOUDLY
     // here, so the audit covers the gate column, not just the shard layout
-    val gateOn = metaRow.schema.fieldNames.contains("bench_on") &&
-      metaRow.getAs[Boolean]("bench_on")
+    val gateOn = metaRow.getAs[Boolean]("bench_on")
     if (gateOn) {
       val report = spark.read.parquet(s"$outDir/report")
       if (!report.columns.contains("docs_contaminated"))
@@ -2496,12 +2152,8 @@ object Pipeline {
       if (corpusOnDisk)
         spark.read.parquet(s"$outDir/corpus").select(col("doc_id"), col("text"))
       else
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("text",
-              org.apache.spark.sql.types.StringType))))
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+          new StructType().add("doc_id", LongType).add("text", "string"))
     val actual = Layout.shardManifest(corpusView, numShards).as("a")
     val mSide = struct(fields.map(f => col(s"m.$f").as(f)): _*)
     val aSide = struct(fields.map(f => col(s"a.$f").as(f)): _*)

@@ -50,7 +50,7 @@ abstract class PipelineIncrBase extends AnyFunSuite {
     spark.read.parquet(path).orderBy(order.map(col): _*)
       .collect().map(_.toString).toSeq
 
-  /** Pointer rows (`bucket -> layer epochs`) of `kind` ('fp' | 'v') from
+  /** Pointer rows (`bucket -> layer epochs`) of `kind` ('fp' | 'v' | 'k') from
     * an epoch's commit artifact.
     */
   protected def ptrOf(out: String, e: Long, kind: String): Map[Int, Set[Long]] =

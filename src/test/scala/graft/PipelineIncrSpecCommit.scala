@@ -423,6 +423,10 @@ class PipelineIncrSpecCommit extends PipelineIncrBase {
         Pipeline.regate(spark, out, bench, 1L)
       }
       assert(eRegate.getMessage.contains("re-found"), s"$name: ${eRegate.getMessage}")
+      val eAudit = intercept[IllegalArgumentException] {
+        Pipeline.validateCorpus(spark, out)
+      }
+      assert(eAudit.getMessage.contains("re-found"), s"$name: ${eAudit.getMessage}")
       assert(snapshot(out) === before, s"$name: a refused outDir must be left untouched")
     }
   }

@@ -167,7 +167,7 @@ class PipelineIncrSpecState extends PipelineIncrBase {
   }
 
   test("state written under a different bucket constant re-buckets BEFORE any probe trusts it") {
-    // the upgrade path: a deployment changes VBuckets/FpBuckets, restarts,
+    // the upgrade path: a deployment changes a bucket count, restarts,
     // and continues an outDir whose state is bucketed under the OLD
     // constant. The epoch's bucket-pruned probes must not prune
     // old-constant partitions with new-constant bucket sets — a missed
@@ -176,8 +176,9 @@ class PipelineIncrSpecState extends PipelineIncrBase {
     // mismatch and the epoch compacts into the new scheme.
     val out0 = Files.createTempDirectory("graft-incr-nb-old").toString
     Pipeline.curateEpoch(chunk(100, Long.MaxValue), out0, Shards, 0L)
-    // fabricate the old-constant layout: re-bucket both state families
-    // under 32 buckets and rewrite the commit artifact's pointer rows
+    // fabricate the old-constant layout: re-bucket the three bucketed
+    // state families under 32 buckets and rewrite the commit artifact's
+    // pointer rows
     val OldNB = 32
     val vRe = spark.read.parquet(s"$out0/state/vbkt/epoch=0").drop("bucket")
       .withColumn("bucket",
@@ -190,6 +191,12 @@ class PipelineIncrSpecState extends PipelineIncrBase {
       .localCheckpoint()
     fRe.write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$out0/state/fpcnt/epoch=0")
+    val kRe = spark.read.parquet(s"$out0/state/kbkt/epoch=0").drop("bucket")
+      .withColumn("bucket",
+        pmod(xxhash64(col("bag")), lit(OldNB.toLong)).cast("int"))
+      .localCheckpoint()
+    kRe.write.mode("overwrite").partitionBy("bucket")
+      .parquet(s"$out0/state/kbkt/epoch=0")
     def bucketsOf(p: String): Seq[Int] =
       java.nio.file.Files.list(java.nio.file.Paths.get(p)).toArray
         .map(_.toString).filter(_.contains("bucket="))
@@ -202,8 +209,10 @@ class PipelineIncrSpecState extends PipelineIncrBase {
       bucketsOf(s"$out0/state/vbkt/epoch=0").map(b => Pipeline.CommitRow("v",
         bucket = Some(b), epoch = Some(0L), n_buckets = Some(OldNB))) ++
       bucketsOf(s"$out0/state/fpcnt/epoch=0").map(b => Pipeline.CommitRow("fp",
+        bucket = Some(b), epoch = Some(0L), n_buckets = Some(OldNB))) ++
+      bucketsOf(s"$out0/state/kbkt/epoch=0").map(b => Pipeline.CommitRow("k",
         bucket = Some(b), epoch = Some(0L), n_buckets = Some(OldNB)))
-    commit.filter(!col("kind").isin("fp", "v"))
+    commit.filter(!col("kind").isin("fp", "v", "k"))
       .unionByName(ptrs.toDS().toDF(), allowMissingColumns = true)
       .localCheckpoint()
       .write.mode("overwrite").parquet(s"$out0/state/commit/epoch=0")
@@ -229,6 +238,8 @@ class PipelineIncrSpecState extends PipelineIncrBase {
       "a bucket-constant mismatch must compact the verdict state")
     assert(ptrOf(out, 1L, "fp").values.flatten.toSet === Set(1L),
       "a bucket-constant mismatch must compact the fp state")
+    assert(ptrOf(out, 1L, "k").values.flatten.toSet === Set(1L),
+      "a bucket-constant mismatch must compact the keeper state")
   }
 
   test("the winv log stays bounded: re-delivered docs never append their windows twice") {
