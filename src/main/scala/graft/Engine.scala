@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * ~100 TB; everything here is also valid on `local[N]` for tests. We rely on
   * Catalyst + AQE for join-strategy selection, skew-join splitting and
   * partition coalescing rather than hand-scheduling. Shuffle partitions are
-  * sized by the caller (32 for local tests; a real cluster submit would
-  * override via `--conf`).
+  * sized by the caller (the core count for a local session; a real cluster
+  * submit would override via `--conf`).
   *
   * Reference: the fs2-kafka-streams runtime knobs (poll cadence, buffer
   * bounds — /root/reference/src/main/scala/com/iravid/fs2/kafka/client/
@@ -79,10 +79,10 @@ object Engine {
     * 1.77 s single-task decimal rescore in q46). An explicit count
     * (`REPARTITION_BY_NUM`) is a user-stated parallelism decision AQE
     * honors. The count is the session's `spark.sql.shuffle.partitions` —
-    * set per deployment (32 locally, cluster-sized on a real submit) — so
-    * the widening scales with the configured parallelism instead of a
-    * literal. Keyed by `cols` when given (deterministic hash placement);
-    * round-robin otherwise.
+    * set per deployment (the core count locally, cluster-sized on a real
+    * submit) — so the widening scales with the configured parallelism
+    * instead of a literal. Keyed by `cols` when given (deterministic hash
+    * placement); round-robin otherwise.
     */
   def widen(df: org.apache.spark.sql.DataFrame,
       cols: org.apache.spark.sql.Column*): org.apache.spark.sql.DataFrame = {
@@ -172,8 +172,20 @@ object Engine {
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
 
-  /** Local session for tests / benches. */
-  def session(cores: Int = 32, appName: String = "graft"): SparkSession = {
+  /** A positive-integer setting from the environment, `default` when unset.
+    * A value that is not an integer ≥ 1 fails with the variable's name.
+    */
+  private[graft] def envCount(name: String, default: => Int): Int =
+    sys.env.get(name).map { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"$name must be an integer >= 1, got '$v'"))
+    }.getOrElse(default)
+
+  /** Local session with `cores` threads and shuffle partitions; by default
+    * `SPARK_GRAFT_CPUS`, else the machine's processors.
+    */
+  def session(cores: Int = envCount("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors),
+      appName: String = "graft"): SparkSession = {
     val s = configure(
       SparkSession.builder().master(s"local[$cores]").appName(appName),
       shufflePartitions = cores).getOrCreate()

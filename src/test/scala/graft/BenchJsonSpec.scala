@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench result line is a round ARTIFACT parsed from a bounded output
@@ -63,6 +64,10 @@ class BenchJsonSpec extends AnyFunSuite {
     for (k <- Seq("\"metric\"", "\"value\"", "\"unit\"", "\"reps\"",
         "\"load\"", "\"queries\"", "\"errors\"", "\"sf\""))
       assert(line.contains(k), s"missing $k")
+    // an SF dir with a quote and a backslash must not break the line
+    val oddDir = "/data/sf \"0.1\"\\x"
+    val odd = Bench.renderJson(Seq("q1_filter_agg" -> 1.0), Seq.empty, 3, oddDir)
+    assert(new ObjectMapper().readTree(odd).get("sf").asText === oddDir, odd)
   }
 
   test("mins key: absent on idle runs, capped + budget-bounded on contended ones") {
@@ -105,5 +110,26 @@ class BenchJsonSpec extends AnyFunSuite {
       Seq("bad_q" -> "IllegalStateException"), 3, "/dir")
     assert(line.contains("\"errors\":{\"bad\":\"IllegalStateException\"}"))
     assert(line.contains("\"value\":1.000"))
+  }
+
+  test("a measured query records its jobs, driver time and plan shape, as JSON") {
+    val fn = SparkEntry.queries("q5_enrich_join")
+    val (times, figures) = Bench.measure(TestSpark.spark, TestSpark.sf0001, fn, 2)
+    assert(times.size === 2)
+    val r = new ObjectMapper().readTree(Bench.renderDetail(
+      Seq(("q5_enrich_join", (times.max, times.min), figures)), 2,
+      TestSpark.sf0001, 0.5, 0.5)).get("queries").get("q5_enrich_join")
+    def n(k: String) = r.get(k).asDouble
+    assert(n("jobs") >= 1 && n("tasks") >= n("jobs"), r)
+    assert(n("driver_s") >= 0 && n("driver_s") <= n("last_s"), r)
+    val plan = r.get("plan")
+    assert(plan.get("shuffle_exchanges").asInt + plan.get("broadcast_exchanges").asInt >= 1, r)
+    // every join strategy the executed plan shows is counted
+    val shown = fn(TestSpark.spark, TestSpark.sf0001).queryExecution.executedPlan.toString
+    val strategies = Seq("SortMergeJoin" -> "smj", "ShuffledHashJoin" -> "shj",
+      "BroadcastHashJoin" -> "bhj", "BroadcastNestedLoopJoin" -> "bnlj",
+      "CartesianProduct" -> "cartesian").filter(s => shown.contains(s._1))
+    assert(strategies.nonEmpty, shown)
+    strategies.foreach { case (node, key) => assert(plan.get(key).asInt >= 1, s"$node: $r") }
   }
 }

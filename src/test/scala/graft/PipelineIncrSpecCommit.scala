@@ -195,8 +195,9 @@ class PipelineIncrSpecCommit extends PipelineIncrBase {
       // folding epochs cost the same.
       assert(tails.last <= tails(1) + 3,
         s"job count must not creep with accumulated layers (${tails.mkString(", ")})")
-      // absolute pin on the round-14 trimmed constant (IncrBench gate-off
-      // steady epochs measure 55–56; fixture epochs run a few more branch
+      // absolute pin on the round-14 trimmed constant (the traced
+      // incremental_epochs benchmark's gate-off tail epochs measure
+      // epoch.jobs_p50 = 56; fixture epochs run a few more branch
       // jobs — crossing probes, folds): regressions that re-add per-epoch
       // jobs (read-backs, extra materializations, schema inference) trip
       // this before they reach the bench
