@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Fixtures, GraftQuery}
+import graft.sinks.ViewLayout
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,7 +24,11 @@ import org.apache.spark.sql.functions._
   * streams/Table.scala:23-33) are exposed by [[ReadOnlyTableView]]: filters
   * on the materialized view that Catalyst pushes into the scan. `getAll`
   * becomes an IN-list (semi-join against a literal list ≈ RocksDB multiGet,
-  * streams/PolyKVStore.scala:122-140).
+  * streams/PolyKVStore.scala:122-140). Over a view from `Sinks.readView`,
+  * whose `__bucket` column carries the view's [[graft.sinks.ViewLayout]],
+  * a lookup also names its keys' buckets, so the scan lists and reads only
+  * those `__bucket=` directories: one bucket, one file for a `get`. The
+  * bucket is the view's key group.
   */
 object LatestByKey {
 
@@ -41,15 +46,35 @@ object LatestByKey {
 
   /** Read-only view over a materialized table: the engine surface for the
     * reference's `ReadOnlyTable` (get/getAll/scan, streams/Table.scala:10-16).
+    *
+    * When `view`'s `__bucket` column carries a [[graft.sinks.ViewLayout]]
+    * for `keyCol` (`Sinks.readView`), `get`/`getAll` add
+    * `__bucket IN (pmod(xxhash64(cast(k AS keyType)), n), …)`, which folds
+    * to literals and prunes the view's partitions at planning; keys whose
+    * equality is not byte equality (float/double, collated strings) keep
+    * the plain filter. No answer ever shows `__bucket`. Any other
+    * DataFrame gets the plain key filter.
     */
   final class ReadOnlyTableView(val view: DataFrame, keyCol: String) {
+    private val layout = ViewLayout.of(view)
+    private val routing = layout.filter(l =>
+      l.keyCol == keyCol && view.schema(keyCol).dataType == l.keyType)
+    private def rows(df: DataFrame) =
+      if (layout.isDefined) df.drop(ViewLayout.BucketCol) else df
+    private def lookup(keyFilter: Column, ks: Seq[Any]): DataFrame = {
+      val buckets = routing.map(l => ks.flatMap(l.bucketOf(_)))
+      rows(view.filter(buckets match {
+        case Some(bs) if bs.size == ks.size =>
+          keyFilter && col(ViewLayout.BucketCol).isin(bs: _*)
+        case _ => keyFilter
+      }))
+    }
     /** Point lookup (A18): key-equality filter, pushed into the scan. */
-    def get(k: Any): DataFrame = view.filter(col(keyCol) === lit(k))
+    def get(k: Any): DataFrame = lookup(col(keyCol) === lit(k), Seq(k))
     /** Multi-get (A19): IN-list, planned as a pushed `In` filter. */
-    def getAll(ks: Seq[Any]): DataFrame =
-      view.filter(col(keyCol).isin(ks: _*))
+    def getAll(ks: Seq[Any]): DataFrame = lookup(col(keyCol).isin(ks: _*), ks)
     /** Full scan (A20). */
-    def scan: DataFrame = view
+    def scan: DataFrame = rows(view)
   }
 
   def table(spark: SparkSession, dir: String): ReadOnlyTableView =

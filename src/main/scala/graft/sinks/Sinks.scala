@@ -204,49 +204,72 @@ object Sinks {
     * (`Tables.persistent`, streams/Tables.scala:110-139), maintained from
     * `foreachBatch`.
     *
+    * Each row sits in bucket `pmod(xxhash64(keyCol), numBuckets)`, one
+    * `__bucket=b` directory per bucket. The first upsert records that
+    * layout in a [[ViewLayout]] file at the view root; an upsert whose
+    * `numBuckets`, key column or key type differs from it is refused before
+    * anything is written, since it would hash a stored key into a second
+    * bucket and leave it there twice. A `__bucket=` view without the file
+    * is refused too: it predates the layout and must be rebuilt.
+    *
     * Each epoch rewrites ONLY the hash buckets the batch touches (dynamic
     * partition overwrite), so maintenance cost scales with the delta ×
     * bucket size, not the view size. The touched-bucket list is collected
     * to the driver for planning-time partition pruning — bounded by
     * `numBuckets` (a config constant), so this is IN-list pruning, not an
-    * unbounded driver materialization. Re-running a batch after a crash
-    * rewrites the same buckets with the same contents (last-write-wins by
-    * `idCol`), so the merge is idempotent per epoch.
+    * unbounded driver materialization. The merge shuffles once, on
+    * `__bucket`, which also satisfies the (`__bucket`, key) grouping, and
+    * sorts each partition by (`__bucket`, key), which is the writer's own
+    * ordering: every touched bucket gets exactly one key-sorted file.
+    * Re-running a batch after a crash rewrites the same buckets with the
+    * same contents (last-write-wins by `idCol`), so the merge is idempotent
+    * per epoch.
     */
   def upsertView(updates: DataFrame, viewPath: String, keyCol: String,
       idCol: String, numBuckets: Int): Unit = {
     import org.apache.spark.sql.functions._
+    import ViewLayout.BucketCol
     // `__bucket` is reserved for the view's internal hash-partition column —
     // failing fast beats silently overwriting (and later dropping) user data.
-    require(!updates.columns.contains("__bucket"),
+    require(!updates.columns.contains(BucketCol),
       "updates must not carry a '__bucket' column (reserved by upsertView)")
     val spark = updates.sparkSession
-    val withB = updates.withColumn("__bucket",
-      pmod(org.apache.spark.sql.functions.xxhash64(col(keyCol)), lit(numBuckets.toLong)))
+    // existence via the Hadoop FS layer, same as the write/read side — a
+    // java.io.File check silently returns false for s3a://hdfs://file:/
+    // URIs, which would make every epoch overwrite (i.e. DELETE) the
+    // previously stored keys of its touched buckets.
+    val p = new org.apache.hadoop.fs.Path(viewPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val layout = ViewLayout(numBuckets, keyCol, updates.schema(keyCol).dataType)
+    val hasView = fs.exists(p) &&
+      fs.listStatus(p).exists(_.getPath.getName.startsWith(s"$BucketCol="))
+    val recorded = ViewLayout.read(fs, p)
+    recorded.foreach(r => require(r == layout,
+      s"view $viewPath has layout $r; this upsert asks for $layout"))
+    require(recorded.nonEmpty || !hasView,
+      s"view $viewPath has no ${ViewLayout.LayoutFile}: it was written " +
+        "before views recorded their layout; rebuild the view")
+    val withB = updates.withColumn(BucketCol, layout.bucket(col(keyCol)))
     // The batch lineage is consumed twice (touched-bucket collect + merge
     // write); persist so a transformWithState-derived micro-batch isn't
     // recomputed per use.
     withB.persist()
     try {
-      // existence via the Hadoop FS layer, same as the write/read side — a
-      // java.io.File check silently returns false for s3a://hdfs://file:/
-      // URIs, which would make every epoch overwrite (i.e. DELETE) the
-      // previously stored keys of its touched buckets.
-      val p = new org.apache.hadoop.fs.Path(viewPath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val hasView = fs.exists(p) &&
-        fs.listStatus(p).exists(_.getPath.getName.startsWith("__bucket="))
       val all = if (hasView) {
-        val touched = withB.select(col("__bucket")).distinct()
+        val touched = withB.select(col(BucketCol)).distinct()
           .collect().map(_.getLong(0)).toSeq
         spark.read.parquet(viewPath)
-          .filter(col("__bucket").isin(touched: _*))
+          .filter(col(BucketCol).isin(touched: _*))
           .unionByName(withB)
       } else withB
-      val payload = all.columns.filterNot(_ == keyCol)
-      val merged = all.groupBy(col(keyCol))
+      val payload = all.columns.filterNot(c => c == keyCol || c == BucketCol)
+      val merged = all.repartition(col(BucketCol))
+        .groupBy(col(BucketCol), col(keyCol))
         .agg(max_by(struct(payload.map(col): _*), col(idCol)).as("__p"))
-        .select(col(keyCol) +: payload.map(c => col("__p").getField(c).as(c)): _*)
+        .select(col(BucketCol) +: col(keyCol) +: payload.map(c => col("__p").getField(c).as(c)): _*)
+        .sortWithinPartitions(BucketCol, keyCol)
+      // the layout goes down once the merge has analysed, before any data
+      if (recorded.isEmpty) ViewLayout.write(fs, p, layout)
       // per-WRITE dynamic overwrite (the writer option overrides the
       // session conf): upsertView runs from foreachBatch, and two
       // streaming queries sharing one session could interleave a
@@ -254,13 +277,23 @@ object Sinks {
       // mode — turning every later static Overwrite into a merge
       merged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__bucket").parquet(viewPath)
+        .partitionBy(BucketCol).parquet(viewPath)
     } finally withB.unpersist()
   }
 
-  /** Read a view maintained by [[upsertView]] (drops the internal bucket). */
-  def readView(spark: org.apache.spark.sql.SparkSession, viewPath: String): DataFrame =
-    spark.read.parquet(viewPath).drop("__bucket")
+  /** Read a view maintained by [[upsertView]]. A view that records its
+    * [[ViewLayout]] keeps `__bucket`, carrying the layout in that column's
+    * metadata, so `LatestByKey.ReadOnlyTableView` routes each key to its
+    * bucket and hides the column. A view without the file drops `__bucket`.
+    */
+  def readView(spark: org.apache.spark.sql.SparkSession, viewPath: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(viewPath)
+    val view = spark.read.parquet(viewPath)
+    ViewLayout.read(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p) match {
+      case Some(layout) => ViewLayout.tag(view, layout)
+      case None => view.drop(ViewLayout.BucketCol)
+    }
+  }
 
   /** Bucketed managed table: co-locates data by key at WRITE time so
     * later joins/aggregations on the bucket key plan with NO exchange —
